@@ -6,11 +6,12 @@
 #
 #   bash scripts/gate.sh [sfDir] [outDir]
 #
-# 1. sbt test              — full suite must compile AND run green
-# 2. graft.Verify          — dump every oracle entry at sf0.01
-# 3. scripts/check.py      — value-compare vs the DuckDB oracle
-# 4. scripts/oracle_types.py — no HUGEINT/DECIMAL leaks in oracle types
-# 5. git status --porcelain  — no untracked/modified round artifacts
+# 1. session factory lint  — SparkSession.builder() only in core/Sessions.scala
+# 2. sbt test              — full suite must compile AND run green
+# 3. graft.Verify          — dump every oracle entry at sf0.01
+# 4. scripts/check.py      — value-compare vs the DuckDB oracle
+# 5. scripts/oracle_types.py — no HUGEINT/DECIMAL leaks in oracle types
+# 6. git status --porcelain  — no untracked/modified round artifacts
 #
 # pipefail is load-bearing: every check below is piped through
 # tail/tee, and without it the gate tests the PIPE's exit status, not
@@ -22,14 +23,27 @@ OUT_DIR="${2:-/tmp/verify_gate}"
 cd "$(dirname "$0")/.."
 SUMMARY=""
 
-echo "== gate 1/5: sbt test"
+echo "== gate 1/6: one session factory"
+# Every main builds its session through graft.core.Sessions, so the
+# session Verify checks against the oracle is the one Bench times and
+# Runner ships. A second builder under src/main lets them drift apart.
+BUILDERS="$(grep -rn 'SparkSession\.builder\b' src/main \
+  | grep -v '^src/main/scala/graft/core/Sessions\.scala:' || true)"
+if [ -n "$BUILDERS" ]; then
+  echo "$BUILDERS"
+  echo "GATE FAIL: SparkSession.builder() outside src/main/scala/graft/core/Sessions.scala"
+  exit 1
+fi
+SUMMARY+="session factory: one SparkSession.builder() (core/Sessions.scala)\n"
+
+echo "== gate 2/6: sbt test"
 if sbt -batch test 2>&1 | tail -5 | tee /tmp/gate_sbt.txt; then
   SUMMARY+="sbt test: $(grep -Eo 'Tests: succeeded [0-9]+, failed [0-9]+' /tmp/gate_sbt.txt | tail -1)\n"
 else
   echo "GATE FAIL: sbt test"; exit 1
 fi
 
-echo "== gate 2/5: graft.Verify at $SF_DIR"
+echo "== gate 3/6: graft.Verify at $SF_DIR"
 CP="$(ls /opt/spark/jars/*.jar | tr '\n' ':')target/scala-2.13/classes"
 SPARK_GRAFT_CPUS=8 java -Xmx12g \
   $(for m in java.lang java.lang.invoke java.lang.reflect java.io java.net \
@@ -41,7 +55,7 @@ SPARK_GRAFT_CPUS=8 java -Xmx12g \
   --add-opens=java.base/sun.util.calendar=ALL-UNNAMED \
   -cp "$CP" graft.Verify "$SF_DIR" "$OUT_DIR" 2>/dev/null | grep -i fail || true
 
-echo "== gate 3/5: oracle value compare (persists CORRECTNESS_local.json)"
+echo "== gate 4/6: oracle value compare (persists CORRECTNESS_local.json)"
 # --json writes the per-query verdicts in the driver artifact's shape;
 # r13's driver artifact came back empty, so the repo commits its own
 # (VERDICT r13 #1). Commit the refreshed file with the closing docs.
@@ -51,15 +65,15 @@ else
   echo "GATE FAIL: oracle compare"; exit 1
 fi
 
-echo "== gate 4/5: oracle result-type sweep"
+echo "== gate 5/6: oracle result-type sweep"
 if python3 scripts/oracle_types.py "$SF_DIR" "$OUT_DIR" 2>&1 | tail -2 | tee /tmp/gate_types.txt; then
   SUMMARY+="oracle types: $(tail -1 /tmp/gate_types.txt)\n"
 else
   echo "GATE FAIL: oracle types"; exit 1
 fi
 
-echo "== gate 5/5: working tree clean (round artifacts committed)"
-# CORRECTNESS_local.json is exempt: gate 3 just regenerated it from THIS
+echo "== gate 6/6: working tree clean (round artifacts committed)"
+# CORRECTNESS_local.json is exempt: gate 4 just regenerated it from THIS
 # tree, so it is never stale last-minute work — it is the artifact the
 # closing commit must include. Everything else dirty still fails.
 DIRTY="$(git status --porcelain | grep -v ' CORRECTNESS_local\.json$' || true)"

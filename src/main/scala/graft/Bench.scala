@@ -9,7 +9,7 @@ object Bench {
     * 1.3x between two artifacts, a uniform 1.3x query inflation is the
     * machine, not a regression. Pure integer xorshift mix — no
     * allocation, no JIT-variant branches, deterministic work. */
-  private[graft] def sentinelSec(): Double = {
+  private def sentinelSec(): Double = {
     def once(): Double = {
       val t0 = System.nanoTime()
       var x = 0x9e3779b97f4a7c15L; var i = 0
@@ -32,7 +32,7 @@ object Bench {
     * uniform machine swing; parallel sentinel moved alone → the box's
     * spare parallel capacity shrank and bandwidth-heavy entries are
     * the ones inflated. */
-  private[graft] def parallelSentinelSec(spark: SparkSession, lanes: Int): Double = {
+  private def parallelSentinelSec(spark: SparkSession, lanes: Int): Double = {
     def once(): Double = {
       val t0 = System.nanoTime()
       spark.sparkContext.parallelize(0 until lanes, lanes).map { s =>
@@ -54,14 +54,19 @@ object Bench {
     * column-bytes scan of the sf dir's documents parquet (codegen paid
     * on a warmup scan of region first, so the number is IO+decode, not
     * JIT): if this moved between artifacts while the CPU sentinels
-    * held, small-scan entries are riding cache state, not code. */
-  private[graft] def ioSentinelSec(spark: SparkSession, sfDir: String): Double = {
-    spark.read.parquet(s"$sfDir/region.parquet").count() // pay codegen/JIT
-    val t0 = System.nanoTime()
-    spark.read.parquet(s"$sfDir/documents.parquet")
-      .selectExpr("SUM(octet_length(text))").collect()
-    (System.nanoTime() - t0) / 1e9
-  }
+    * held, small-scan entries are riding cache state, not code. None
+    * when the sf dir cannot be read, so a run whose entries all failed
+    * still reaches its summary line. */
+  private def ioSentinelSec(spark: SparkSession, sfDir: String): Option[Double] =
+    try {
+      spark.read.parquet(s"$sfDir/region.parquet").count() // pay codegen/JIT
+      val t0 = System.nanoTime()
+      spark.read.parquet(s"$sfDir/documents.parquet")
+        .selectExpr("SUM(octet_length(text))").collect()
+      Some((System.nanoTime() - t0) / 1e9)
+    } catch { case e: Exception =>
+      System.err.println(s"[bench] io sentinel failed: ${e.getMessage}"); None
+    }
 
   private def loadAvg(): String =
     try scala.io.Source.fromFile("/proc/loadavg").mkString.trim
@@ -70,17 +75,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // engine optimizer rewrites (HOF dot -> native kernel) active in
-      // the bench session, same as any production deployment
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.core.Tables.tunePerf(spark)
+    val spark = graft.core.Sessions.create()
     // Deterministic name order: hash-map iteration order made per-query
     // attribution incomparable across runs (the first consumer of each
     // memoized shared relation absorbs its whole build cost).
@@ -90,22 +85,28 @@ object Bench {
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val queries = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
-    def runOnce(timed: Boolean): Seq[(String, Double)] = queries.map { case (name, fn) =>
-      // measurement hygiene: settle the heap before each TIMED query so
-      // a heavy alphabetical neighbor's garbage is not charged to this
-      // query's wall clock (r5 showed 2-4x in-bench inflation vs
-      // isolated warm runs from exactly this cross-charging)
-      if (timed) System.gc()
-      val t0 = System.nanoTime()
-      // error isolation with one retry — the reference's failed-batch
-      // rerun-singly semantics (run_test_execution.py:300-352)
-      try { fn(spark, sfDir).count() }
-      catch {
-        case _: Throwable =>
-          try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+    // A failed entry gets no time: it is named in the summary line, not
+    // run again, and fails the run.
+    val failed = scala.collection.mutable.LinkedHashSet.empty[String]
+    def runOnce(timed: Boolean): Map[String, Double] = queries.flatMap { case (name, fn) =>
+      if (failed(name)) None
+      else {
+        // measurement hygiene: settle the heap before each TIMED query so
+        // a heavy alphabetical neighbor's garbage is not charged to this
+        // query's wall clock (r5 showed 2-4x in-bench inflation vs
+        // isolated warm runs from exactly this cross-charging)
+        if (timed) System.gc()
+        val t0 = System.nanoTime()
+        try {
+          fn(spark, sfDir).count()
+          Some(name -> (System.nanoTime() - t0) / 1e9)
+        } catch { case e: Throwable =>
+          failed += name
+          System.err.println(s"[bench] $name failed: ${e.getMessage}")
+          None
+        }
       }
-      name -> (System.nanoTime() - t0) / 1e9
-    }
+    }.toMap
     // Untimed warm-up pass: pays the one-time costs (JIT/codegen warmup,
     // memoized shared relations) so the TIMED passes measure steady-state
     // per-query cost — two consecutive bench runs now agree per query
@@ -125,23 +126,24 @@ object Bench {
     // 0.2-0.4 s regressions worth catching from a busy neighbor.
     val passes = sys.env.get("SPARK_GRAFT_BENCH_PASSES")
       .flatMap(_.toIntOption).getOrElse(4).max(1)
+    val lanes = graft.core.Sessions.cpus
     val loadStart = loadAvg()
     val sentinelBefore = sentinelSec()
-    val parSentinelBefore = parallelSentinelSec(spark, cpus.toInt)
+    val parSentinelBefore = parallelSentinelSec(spark, lanes)
     val ioSentinelBefore = ioSentinelSec(spark, sfDir)
     val timedRuns = (1 to passes).map(_ => runOnce(timed = true))
     val sentinelAfter = sentinelSec()
-    val parSentinelAfter = parallelSentinelSec(spark, cpus.toInt)
+    val parSentinelAfter = parallelSentinelSec(spark, lanes)
     val ioSentinelAfter = ioSentinelSec(spark, sfDir)
     val loadEnd = loadAvg()
+    def num(d: Option[Double]): String = d.fold("null")(_.toString)
     val telemetry =
       s""""sentinel_sec_before":$sentinelBefore,"sentinel_sec_after":$sentinelAfter,""" +
       s""""par_sentinel_sec_before":$parSentinelBefore,"par_sentinel_sec_after":$parSentinelAfter,""" +
-      s""""io_sentinel_sec_before":$ioSentinelBefore,"io_sentinel_sec_after":$ioSentinelAfter,""" +
+      s""""io_sentinel_sec_before":${num(ioSentinelBefore)},"io_sentinel_sec_after":${num(ioSentinelAfter)},""" +
       s""""loadavg_start":"$loadStart","loadavg_end":"$loadEnd""""
-    val results = queries.map(_._1).zipWithIndex.map { case (name, i) =>
-      name -> timedRuns.map(_(i)._2).min
-    }
+    val timedNames = queries.map(_._1).filterNot(failed)
+    val results = timedNames.map(name => name -> timedRuns.map(_(name)).min)
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
@@ -153,7 +155,7 @@ object Bench {
     val productionTotal = results.collect {
       case (k, v) if !harness.contains(k) => v
     }.sum
-    val warmupTotal = warmupRun.map(_.map(_._2).sum)
+    val warmupTotal = warmupRun.map(_.values.sum)
     println(s"""{"metric":"total","value":$total,"unit":"sec","production_total":$productionTotal,$telemetry,"queries":$qs,"sf":"$sfDir"}""")
     // Full per-query record to a file: the driver's stdout tail capture
     // truncates the one-line summary, losing entries round-over-round;
@@ -163,9 +165,9 @@ object Bench {
     // is the untimed warm-up's wall clock for the entry — the landing
     // cost of any memoized shared relation it builds (VERDICT r14 #5).
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_queries.json")
-    val perQuery = queries.map(_._1).zipWithIndex.map { case (name, i) =>
-      val samples = timedRuns.map(_(i)._2)
-      val first = warmupRun.map(w => s""","first_pass":${w(i)._2}""").getOrElse("")
+    val perQuery = timedNames.map { name =>
+      val samples = timedRuns.map(_(name))
+      val first = warmupRun.map(w => s""","first_pass":${w(name)}""").getOrElse("")
       s""""$name":{"min":${samples.min},"passes":[${samples.mkString(",")}]$first}"""
     }.mkString("{", ",", "}")
     val warmupField = warmupTotal.map(w => s""""warmup_total":$w,""").getOrElse("")
@@ -183,8 +185,10 @@ object Bench {
     // unchanged.
     def r4(d: Double): Double = math.rint(d * 10000) / 10000
     val warmupShort = warmupTotal.map(w => s""""warmup_total":${r4(w)},""").getOrElse("")
+    val failedJson = failed.map(n => s""""$n"""").mkString("[", ",", "]")
     println(
-      s"""{"metric":"total","value":${r4(total)},"unit":"sec","production_total":${r4(productionTotal)},"n_queries":${results.size},"n_passes":$passes,$warmupShort"sentinels":[${r4(sentinelBefore)},${r4(sentinelAfter)}],"par_sentinels":[${r4(parSentinelBefore)},${r4(parSentinelAfter)}],"io_sentinels":[${r4(ioSentinelBefore)},${r4(ioSentinelAfter)}],"sf":"$sfDir"}""")
+      s"""{"metric":"total","value":${r4(total)},"unit":"sec","production_total":${r4(productionTotal)},"n_queries":${results.size},"n_failed":${failed.size},"failed":$failedJson,"n_passes":$passes,$warmupShort"sentinels":[${r4(sentinelBefore)},${r4(sentinelAfter)}],"par_sentinels":[${r4(parSentinelBefore)},${r4(parSentinelAfter)}],"io_sentinels":[${num(ioSentinelBefore.map(r4))},${num(ioSentinelAfter.map(r4))}],"sf":"$sfDir"}""")
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Dev tooling (like [[BenchOne]]/[[PlanDump]]): export the known
+/** Dev tooling (like [[PlanDump]]): export the known
   * tables from a parquet fixture dir into a text-format fixture via
   * [[graft.sources.Sources.write]], so the Runner's opt-in `ingest`
   * stage (csv/json/orc → parquet landing) can be cold-benched at any
@@ -17,15 +15,7 @@ object FixtureExport {
     val fmt = if (args.length > 2) args(2) else "csv"
     val tables =
       if (args.length > 3) args(3).split(",").toSeq else graft.core.Tables.names
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.core.Tables.tunePerf(spark)
+    val spark = graft.core.Sessions.create()
     tables.foreach { t =>
       graft.sources.Sources.write(
         graft.core.Tables.load(spark, src, t, parallelize = false), dst, t, fmt)

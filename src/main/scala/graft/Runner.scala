@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** End-to-end job runner — the engine's CLI, mirroring the reference's
   * job lifecycle (reference: testgen/commands/run_profiling.py:37-127 →
@@ -23,23 +23,8 @@ object Runner {
     val dataDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val outDir = if (args.length > 1) args(1) else "/tmp/graft_run"
     val stages = if (args.length > 2) args(2).split(",").toSeq else allStages
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft-runner")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      // install the engine's optimizer rewrites so USER SQL against a
-      // Runner session gets the native kernels (HOF dot -> graft_dot),
-      // not just engine-authored queries. withExtensions (not the
-      // spark.sql.extensions static conf) so the rules land even when
-      // the builder reuses an existing SparkContext.
-      .withExtensions(new graft.plans.GraftExtensions)
-      // bucketed signal tables land under the run's own warehouse
-      .config("spark.sql.warehouse.dir", s"$outDir/warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.core.Tables.tunePerf(spark)
+    // bucketed signal tables land under the run's own warehouse
+    val spark = graft.core.Sessions.create(Some(s"$outDir/warehouse"))
 
     val landedRows = scala.collection.mutable.LinkedHashMap[String, Long]()
     def land(stage: String, name: String, df: DataFrame): Unit = {

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,31 +8,21 @@ object Verify {
     val outDir = args(1)
     // optional: names after outDir restrict the dump to those queries
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.core.Tables.tunePerf(spark)
+    val spark = graft.core.Sessions.create()
     new java.io.File(outDir).mkdirs()
-    var nDumped = 0; var nFailed = 0
+    var nDumped = 0
+    val failed = Seq.newBuilder[String]
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>
-      def attempt(): Unit =
+      // no retry: an entry that fails once fails the run
+      try {
         fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
-      // one retry — the reference's failed-batch rerun-singly semantics
-      try { attempt(); nDumped += 1 }
-      catch { case _: Throwable =>
-        try { attempt(); nDumped += 1 }
-        catch { case e: Throwable =>
-          nFailed += 1
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        }
+        nDumped += 1
+      } catch { case e: Throwable =>
+        failed += name
+        System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -55,7 +44,9 @@ object Verify {
     // One-line dump summary as the LAST stdout line (VERDICT r14 #1):
     // the driver's ~2 KB stdout tail capture needs a parseable record of
     // what this run produced even when per-entry logs scroll past it.
+    val failedNames = failed.result()
     println(
-      s"""{"metric":"verify_dump","n_queries":${nDumped + nFailed},"n_dumped":$nDumped,"n_failed":$nFailed,"out":"$outDir"}""")
+      s"""{"metric":"verify_dump","n_queries":${nDumped + failedNames.size},"n_dumped":$nDumped,"n_failed":${failedNames.size},"failed":${failedNames.map(q).mkString("[", ",", "]")},"out":"$outDir"}""")
+    if (failedNames.nonEmpty) sys.exit(1)
   }
 }

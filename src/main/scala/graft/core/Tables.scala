@@ -34,6 +34,8 @@ object Tables {
     spark
   }
 
+  private val RebalanceTaskBytes = 128L << 10
+
   /** @param parallelize rebalance an under-parallel input (single
     *   row-group file) across the cluster. Worth a shuffle of the raw
     *   table ONLY for heavy per-row work downstream (profiling's regex
@@ -90,7 +92,7 @@ object Tables {
       // beat the 32-core bench end-to-end on per-task fixed costs. The
       // width now derives from the input's on-disk size (deterministic,
       // driver-side, memoized with the relation): one task per
-      // GRAFT_REBALANCE_KB of compressed input (default 128 KB — sized
+      // RebalanceTaskBytes of compressed input (128 KB — sized
       // so the heavy per-row text work behind this guard keeps tasks in
       // the tens-of-ms range), capped by cluster parallelism. On a real
       // multi-row-group input `under` is false and none of this runs;
@@ -102,12 +104,7 @@ object Tables {
           p.getFileSystem(spark.sparkContext.hadoopConfiguration)
             .getContentSummary(p).getLength
         } catch { case _: Exception => Long.MaxValue }
-        val perTaskKb = sys.env.get("GRAFT_REBALANCE_KB")
-          .flatMap(_.toLongOption).getOrElse(128L)
-        // 0 = pre-r15 behavior (always full parallelism), kept for A/B runs.
-        val n =
-          if (perTaskKb <= 0) parallelism
-          else math.min(parallelism.toLong, bytes / (perTaskKb << 10) + 1).toInt.max(1)
+        val n = math.min(parallelism.toLong, bytes / RebalanceTaskBytes + 1).toInt.max(1)
         // n == 1 means the input is smaller than one task's worth: its
         // natural single-partition scan IS the right layout — adding a
         // repartition(1) would be a pure-cost exchange (and a false

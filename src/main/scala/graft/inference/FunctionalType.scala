@@ -451,15 +451,12 @@ object FunctionalType {
     * the temp view name usable as `rel` for the cascade SQLs. */
   def registerProfileAll(spark: SparkSession, dir: String): String =
     graft.core.SessionCache.getOrElseUpdate(spark, "profile_all", dir) {
-      val t0 = System.nanoTime()
       val df = buildProfileAll(spark, dir)
       val local = spark.createDataFrame(
         java.util.Arrays.asList(df.collect(): _*), df.schema)
       val view = s"__graft_profile_all_${graft.core.SessionCache
         .counter(spark, "profile_all").getAndIncrement()}"
       local.createOrReplaceTempView(view)
-      if (sys.env.contains("GRAFT_PROFILE_DEBUG"))
-        println(f"PROFALL all-tables ${(System.nanoTime() - t0) / 1e9}%.2f s")
       view
     }
 
@@ -476,32 +473,6 @@ object FunctionalType {
     // keep total concurrency at tableThreads + actionThreads without the
     // nested-await deadlock a single bounded pool would hit.
     implicit val ec: scala.concurrent.ExecutionContext = graft.core.Pools.tables
-    val sampler: Option[Thread] = sys.env.get("GRAFT_PROFILE_SAMPLER").map { _ =>
-      val th = new Thread { override def run(): Unit = {
-        val counts = scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)
-        try {
-          while (!Thread.interrupted()) {
-            import scala.jdk.CollectionConverters._
-            Thread.getAllStackTraces.asScala.foreach { case (t, st) =>
-              if (t.getState == Thread.State.RUNNABLE && st.nonEmpty) {
-                val top = st.find { e =>
-                  val c = e.getClassName
-                  c.contains("janino") || c.contains("codegen") || c.contains("catalyst") ||
-                  c.contains("parquet") || c.contains("execution") || c.contains("Janino") ||
-                  c.contains("scheduler") || c.contains("unsafe")
-                }.getOrElse(st.head)
-                counts(top.getClassName + "." + top.getMethodName) += 1
-                val grp = t.getName.replaceAll("[0-9]+", "N")
-                counts("THREAD " + grp) += 1
-              }
-            }
-            Thread.sleep(100)
-          }
-        } catch { case _: InterruptedException => }
-        counts.toSeq.sortBy(-_._2).take(45).foreach { case (f, n) => println(s"SAMPLER $n $f") }
-      }}
-      th.setDaemon(true); th.start(); th
-    }
     // Largest tables first: their jobs run longest, so starting them first
     // packs the small tables' work into the stragglers' tail instead of
     // serializing a long job after the pool has drained.
@@ -523,7 +494,6 @@ object FunctionalType {
         t -> joined.withColumn("table_name", lit(t))
       }
     }), Duration.Inf).toMap
-    sampler.foreach { th => th.interrupt(); th.join(2000) }
     // Union in the canonical table order regardless of profiling order.
     Tables.names.map(perTableMap).reduce(_ unionByName _)
   }

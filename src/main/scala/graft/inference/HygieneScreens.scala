@@ -424,19 +424,14 @@ object HygieneScreens {
     * generation, scoring — shares one inference pass. */
   def enrichedView(spark: SparkSession, dir: String): String =
     graft.core.SessionCache.getOrElseUpdate(spark, "enriched_view", dir) {
-      {
-        val rel = FunctionalType.registerProfileAll(spark, dir)
-        val t0 = System.nanoTime()
-        val enr = spark.sql(enrichSql(rel)(SparkDialect))
-        val local = spark.createDataFrame(
-          java.util.Arrays.asList(enr.collect(): _*), enr.schema)
-        val view = s"__graft_enriched_profile_${graft.core.SessionCache
-          .counter(spark, "enriched_view").getAndIncrement()}"
-        local.createOrReplaceTempView(view)
-        if (sys.env.contains("GRAFT_PROFILE_DEBUG"))
-          println(f"ENRICH cascade ${(System.nanoTime() - t0) / 1e9}%.2f s")
-        view
-      }
+      val rel = FunctionalType.registerProfileAll(spark, dir)
+      val enr = spark.sql(enrichSql(rel)(SparkDialect))
+      val local = spark.createDataFrame(
+        java.util.Arrays.asList(enr.collect(): _*), enr.schema)
+      val view = s"__graft_enriched_profile_${graft.core.SessionCache
+        .counter(spark, "enriched_view").getAndIncrement()}"
+      local.createOrReplaceTempView(view)
+      view
     }
 
   def run(spark: SparkSession, dir: String,

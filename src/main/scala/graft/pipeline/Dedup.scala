@@ -139,7 +139,7 @@ object Dedup {
   }
 
   /** Jaccard verification body over (inter, sizes) relations. */
-  private[graft] def jaccardBody(interRel: String, sizesRel: String, threshold: Double): String =
+  private def jaccardBody(interRel: String, sizesRel: String, threshold: Double): String =
     s"""SELECT i.doc_a, i.doc_b,
        |       CAST(ROUND(CAST(i.ict AS DOUBLE) / (sa.sz + sb.sz - i.ict), 4) AS DOUBLE) AS jaccard
        |  FROM $interRel i
@@ -465,13 +465,8 @@ object Dedup {
         // never silently recompute the pipeline (persist+view relies on
         // cache plan-matching, which misses here). On a real cluster the
         // equivalent is reliable checkpoint / write-to-storage.
-        def mat(name: String, sql: String): Unit = {
-          val t0 = System.nanoTime()
-          val df = spark.sql(sql).localCheckpoint(eager = true)
-          df.createOrReplaceTempView(name)
-          if (sys.env.contains("GRAFT_PROFILE_DEBUG"))
-            println(f"DEDUPMAT $name ${(System.nanoTime() - t0) / 1e9}%.2f s")
-        }
+        def mat(name: String, sql: String): Unit =
+          spark.sql(sql).localCheckpoint(eager = true).createOrReplaceTempView(name)
         // band geometry elected ONCE from the corpus count, frozen
         // alongside the signature relation it sized — every band
         // consumer reads the SAME rungs. Count on a RAW load, not the
@@ -791,7 +786,8 @@ object Dedup {
     * (1 - theta/pi)^nPlanes — the standard hamming-cosine guarantee.
     * RECALL at the elected np: the adaptive election trades pair-split
     * probability 1-(1-θ/π)^np for pinned occupancy — MEASURED at scale
-    * by `graft.LshScaleBench` (lsh_scale_r14.json): planted pairs at
+    * in lsh_scale_r14.json (harness source at `git show
+    * a829ce8:src/main/scala/graft/LshScaleBench.scala`): planted pairs at
     * θ≈0.05 rad recall 0.751/0.725/0.704 at 1M/4M/16.8M ids (np
     * 18/20/22), R=3 stack 0.985/0.980/0.977 — a DEDUP miss
     * costs storage, not safety, so this entry ships single-table and
@@ -1313,7 +1309,8 @@ object Dedup {
     * on ~1 s entries) while the win at the graded point and the
     * asymptote is 1.5-2×.
     *
-    * PROVEN r15 (VERDICT r14 #4, graft.AbWinnow at sf1 with
+    * PROVEN r15 (VERDICT r14 #4, the AbWinnow A/B at sf1 — source at
+    * `git show a829ce8:src/main/scala/graft/AbWinnow.scala` — with
     * autoBroadcastJoinThreshold=-1 — the forced sort-merge regime):
     * the FINAL adaptive plan (plans/r15/winnow_ab_window.txt) shows
     * the fingerprint relation exchanged by fp EXACTLY ONCE

@@ -39,7 +39,9 @@ import graft.oracle.{Dialect, DuckDialect, SparkDialect}
   *    relation at fixture scale; the estimate is engine-specific
   *    (DataSketches), so it ships as library API + spec, not an
   *    oracle entry — the repo's streaming-twin precedent.
-  *    Determinism is REGIME-SCOPED (measured, HyperBallScaleBench):
+  *    Determinism is REGIME-SCOPED (measured in
+  *    hyperball_scale_r14.json; harness source at
+  *    `git show a829ce8:src/main/scala/graft/HyperBallScaleBench.scala`):
   *    in DataSketches' exact coupon regime (balls ≲ a few hundred —
   *    the fixture) two runs are bit-identical; once sketches go
   *    dense, `hll_union_agg`'s merge order varies with shuffle

@@ -462,7 +462,8 @@ object Multimodal {
     *    measured 78 s vs 12 s at 1M ids, the explode mass dominates)
     *    and collisions ~14·N²/2³²: output-linear far past 10M ids,
     *    where the 4×16 scheme's N²/2¹⁶ is already dead. Election
-    *    boundary MEASURED, not modeled ([[graft.HammingScaleBench]],
+    *    boundary MEASURED, not modeled (hamming_scale_r14.json, harness
+    *    source at `git show a829ce8:src/main/scala/graft/HammingScaleBench.scala`;
     *    synthetic hash-only relation, calm window, both sentinels
     *    recorded, warmup pass so no point carries JIT, and the band
     *    self-join pinned to SHUFFLE_HASH — the r14 first cut showed
@@ -480,23 +481,13 @@ object Multimodal {
     *    combos — measured 78 s at 1M, strictly dominated.) */
   val HammingElectBound: Long = 1L << 18
 
-  /** The elected candidate CTEs alone (`bands`, `cands`) — split out so
-    * the hamming scale bench ([[graft.HammingScaleBench]]) can count
-    * candidates per scheme without the verify join. */
-  private[graft] def hammingCandsCtes(view: String, hashCol: String,
-                                      nIds: Long): String = {
-    val cands =
+  private[graft] def hammingPairsSql(view: String, hashCol: String,
+                                     nIds: Long): String = {
+    val bands =
       if (nIds <= HammingElectBound)
-        s"""bands AS (
-           |  SELECT id, b AS bi,
+        s"""SELECT id, b AS bi,
            |         shiftrightunsigned($hashCol, CAST(16 * b AS INT)) & 65535 AS bv
-           |    FROM $view LATERAL VIEW explode(array(0, 1, 2, 3)) e AS b
-           |),
-           |cands AS (
-           |  SELECT /*+ SHUFFLE_HASH(a) */ DISTINCT a.id AS id_a, c.id AS id_b
-           |    FROM bands a JOIN bands c
-           |      ON c.bi = a.bi AND c.bv = a.bv AND c.id > a.id
-           |)""".stripMargin
+           |    FROM $view LATERAL VIEW explode(array(0, 1, 2, 3)) e AS b""".stripMargin
       else {
         // the 14 affine hyperplanes of AG(3,2): drop the 4 bands with
         // parity(a & x) == b, keep the other 4 (32 bits of the hash)
@@ -510,22 +501,17 @@ object Multimodal {
         val structs = combos.zipWithIndex.map { case (m, ci) =>
           s"named_struct('ci', $ci, 'm', ${m}L)"
         }.mkString(", ")
-        s"""bands AS (
-           |  SELECT id, cm.ci AS bi, $hashCol & cm.m AS bv
-           |    FROM $view LATERAL VIEW explode(array($structs)) e AS cm
-           |),
-           |cands AS (
-           |  SELECT /*+ SHUFFLE_HASH(a) */ DISTINCT a.id AS id_a, c.id AS id_b
-           |    FROM bands a JOIN bands c
-           |      ON c.bi = a.bi AND c.bv = a.bv AND c.id > a.id
-           |)""".stripMargin
+        s"""SELECT id, cm.ci AS bi, $hashCol & cm.m AS bv
+           |    FROM $view LATERAL VIEW explode(array($structs)) e AS cm""".stripMargin
       }
-    cands
-  }
-
-  private[graft] def hammingPairsSql(view: String, hashCol: String,
-                                     nIds: Long): String = {
-    s"""WITH ${hammingCandsCtes(view, hashCol, nIds)}
+    s"""WITH bands AS (
+       |  $bands
+       |),
+       |cands AS (
+       |  SELECT /*+ SHUFFLE_HASH(a) */ DISTINCT a.id AS id_a, c.id AS id_b
+       |    FROM bands a JOIN bands c
+       |      ON c.bi = a.bi AND c.bv = a.bv AND c.id > a.id
+       |)
        |SELECT id_a, id_b, hamming FROM (
        |  SELECT cd.id_a, cd.id_b,
        |         CAST(bit_count(pa.$hashCol ^ pb.$hashCol) AS INT) AS hamming

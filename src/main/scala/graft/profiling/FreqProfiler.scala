@@ -181,14 +181,7 @@ object FreqProfiler {
       stat(c, "distinct_value_ct") <= 70 && stat(c, "max_length") <= 70)
     val patCols = cols.filter(c => stat(c, "max_length") >= 3 && stat(c, "max_length") <= 25)
     // Stage 2: fused frequency/pattern job over eligible columns only.
-    val debug = sys.env.contains("GRAFT_PROFILE_DEBUG")
-    if (debug) spark.sparkContext.setJobGroup(s"$table/freq", "freq")
-    val t0 = System.nanoTime()
     val out = spark.sql(sparkSql(view, freqCols, patCols, cols))
-    val local = spark.createDataFrame(
-      java.util.Arrays.asList(out.collect(): _*), out.schema)
-    if (debug)
-      println(f"PROFJOB $table freq ${(System.nanoTime() - t0) / 1e9}%.2f s")
-    local
+    spark.createDataFrame(java.util.Arrays.asList(out.collect(): _*), out.schema)
   }
 }

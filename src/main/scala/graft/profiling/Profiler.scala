@@ -75,6 +75,25 @@ object Profiler {
     * stays `"exact"` regardless of the environment. */
   def defaultMode: String = sys.env.getOrElse("GRAFT_PROFILE_MODE", "exact")
 
+  /** Most scalar aggregate expressions fused into one job. */
+  private val ChunkExprs = 96
+
+  /** Packs per-column expression lists, in order and never splitting a
+    * column, into chunks of at most [[ChunkExprs]] expressions (a column
+    * with more than that gets a chunk of its own). */
+  private[profiling] def chunked(perCol: Seq[Seq[String]]): Seq[Seq[String]] = {
+    val out = Seq.newBuilder[Seq[String]]
+    var cur = Seq.empty[String]
+    perCol.filter(_.nonEmpty).foreach { sel =>
+      if (cur.nonEmpty && cur.length + sel.length > ChunkExprs) {
+        out += cur; cur = Seq.empty
+      }
+      cur = cur ++ sel
+    }
+    if (cur.nonEmpty) out += cur
+    out.result()
+  }
+
   /** Execute (memoized per session) the three-job profile for one table.
     * `mode = "approx"` (explicit opt-in — see [[defaultMode]]) routes
     * to the sketch profiler — note the narrower per-column schema
@@ -104,15 +123,6 @@ object Profiler {
         (f, i, ProfileMetrics.entries(f.name, i + 1, f.dataType))
       }
 
-    val debug = sys.env.contains("GRAFT_PROFILE_DEBUG")
-    def timed[T](label: String)(f: => T): T =
-      if (!debug) f
-      else {
-        spark.sparkContext.setJobGroup(s"$table/$label", label)
-        val t0 = System.nanoTime(); val r = f
-        println(f"PROFJOB $table $label ${(System.nanoTime() - t0) / 1e9}%.2f s"); r
-      }
-
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     // Bounded leaf-action pool (graft.core.Pools): the all-tables cascade
@@ -128,33 +138,14 @@ object Profiler {
     // columnar layout means the chunks read DISJOINT column subsets —
     // total I/O stays one-full-scan regardless of chunk count, so this
     // holds at 100 TB where scan bytes, not plan compiles, dominate.
-    val scalarChunks: Seq[Seq[String]] = {
-      val perColSel: Seq[Seq[String]] = perCol.map { case (_, i, es) =>
-        es.collect { case s: ScalarM if s.applies => s }
-          .map(e => s"${e.expr(d)} AS v_${i}_${e.name}")
-      }
-      val maxExprs = sys.env.get("GRAFT_PROFILE_CHUNK")
-        .flatMap(_.toIntOption).filter(_ > 0).getOrElse(96)
-      val out = Seq.newBuilder[Seq[String]]
-      var cur = Seq.empty[String]
-      perColSel.filter(_.nonEmpty).foreach { sel =>
-        if (cur.nonEmpty && cur.length + sel.length > maxExprs) {
-          out += cur; cur = Seq.empty
-        }
-        cur = cur ++ sel
-      }
-      if (cur.nonEmpty) out += cur
-      out.result()
-    }
+    val scalarChunks: Seq[Seq[String]] = chunked(perCol.map { case (_, i, es) =>
+      es.collect { case s: ScalarM if s.applies => s }
+        .map(e => s"${e.expr(d)} AS v_${i}_${e.name}")
+    })
     val scalarFut: Future[Map[String, Any]] = Future.sequence(
-      scalarChunks.zipWithIndex.map { case (sel, ci) =>
+      scalarChunks.map { sel =>
         Future {
-          val row = timed(s"scalar-$ci") {
-            val q = timed(s"scalar-$ci-analyze")(
-              spark.sql(s"SELECT ${sel.mkString(",\n  ")} FROM $view"))
-            timed(s"scalar-$ci-plan")(q.queryExecution.executedPlan)
-            timed(s"scalar-$ci-exec")(q.collect()(0))
-          }
+          val row = spark.sql(s"SELECT ${sel.mkString(",\n  ")} FROM $view").collect()(0)
           row.schema.fieldNames.zipWithIndex
             .map { case (n, j) => n -> row.get(j) }.toMap
         }
@@ -193,8 +184,8 @@ object Profiler {
              |  ) WHERE sv IS NOT NULL OR nv IS NOT NULL OR iv IS NOT NULL
              |  GROUP BY kid, sv, nv, iv
              |) GROUP BY kid""".stripMargin
-        timed("distinct")(spark.sql(sql).collect()
-          .map(r => r.getInt(0) -> r.getLong(1)).toMap)
+        spark.sql(sql).collect()
+          .map(r => r.getInt(0) -> r.getLong(1)).toMap
       }
 
     // Job 3: exact percentiles per numeric column (one array call each).
@@ -210,8 +201,7 @@ object Profiler {
           val input = ps.head.input(d)
           s"transform(percentile($input, array($qs)), x -> CAST(ROUND(x, 4) AS DOUBLE)) AS p_$i"
         }
-        val row = timed("percentile")(
-          spark.sql(s"SELECT ${sel.mkString(", ")} FROM $view").collect()(0))
+        val row = spark.sql(s"SELECT ${sel.mkString(", ")} FROM $view").collect()(0)
         pctCols.flatMap { case (i, ps) =>
           val arr = row.getAs[scala.collection.Seq[Any]](s"p_$i")
           ps.zipWithIndex.map { case (p, j) =>

@@ -217,20 +217,7 @@ object SampledProfiler {
         s"${e.expr(d)} AS c${i}_${e.name}"
       }
     }
-    val maxExprs = sys.env.get("GRAFT_PROFILE_CHUNK")
-      .flatMap(_.toIntOption).filter(_ > 0).getOrElse(96)
-    val chunks: Seq[Seq[String]] = {
-      val out = Seq.newBuilder[Seq[String]]
-      var cur = Seq.empty[String]
-      perColScalar.filter(_.nonEmpty).foreach { sel =>
-        if (cur.nonEmpty && cur.length + sel.length > maxExprs) {
-          out += cur; cur = Seq.empty
-        }
-        cur = cur ++ sel
-      }
-      if (cur.nonEmpty) out += cur
-      out.result()
-    }
+    val chunks: Seq[Seq[String]] = Profiler.chunked(perColScalar)
     val scalarFut: Future[Map[String, Any]] = Future.sequence(
       chunks.map { sel =>
         Future {

@@ -79,17 +79,16 @@ class GraftExtensionsSpec extends SparkSpec {
   test("knn_lsh_fold executes under an extensions session, rows identical to plain") {
     // the production fold form now renders D-suffixed (ARRAY<DOUBLE>)
     // weights, so the rewrite fires legitimately — and must not change
-    // a row (this entry silently crashed to the Bench retry path while
-    // the weights were decimal-typed)
+    // a row (this entry once crashed under the extensions session while
+    // the weights were decimal-typed). The session comes from the same
+    // factory Verify, Bench, Runner and PlanDump use.
     import org.apache.spark.sql.SparkSession
     val plain = graft.pipeline.Similarity.runLshFold(spark, sfDir)
       .collect().map(_.toString).sorted
     val prev = spark
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    val s2 = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
+    val s2 = graft.core.Sessions.create()
     try {
       val ext = graft.pipeline.Similarity.runLshFold(s2, sfDir)
         .collect().map(_.toString).sorted
@@ -103,16 +102,14 @@ class GraftExtensionsSpec extends SparkSpec {
 
   test("a Runner-style session (builder.withExtensions) rewrites user HOF dot") {
     import org.apache.spark.sql.SparkSession
-    // build a session exactly the way Runner/Bench do — withExtensions
-    // at session construction, nothing injected by hand (the static
+    // the session every main builds — withExtensions at session
+    // construction, nothing injected by hand (the static
     // spark.sql.extensions conf form cannot apply on a reused
-    // SparkContext, which is exactly why the builders use withExtensions)
+    // SparkContext, which is exactly why the factory uses withExtensions)
     val prev = spark
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    val s2 = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
+    val s2 = graft.core.Sessions.create()
     try {
       graft.core.Tables.load(s2, sfDir, "embeddings")
         .createOrReplaceTempView("__graft_ext_emb2")
@@ -121,7 +118,7 @@ class GraftExtensionsSpec extends SparkSpec {
            |  FROM __graft_ext_emb2""".stripMargin)
       val plan = df.queryExecution.optimizedPlan.toString
       assert(plan.contains("graft_dot"),
-        s"Runner-style session did not rewrite:\n${plan.take(600)}")
+        s"factory session did not rewrite:\n${plan.take(600)}")
       assert(df.count() > 0)
     } finally {
       SparkSession.setDefaultSession(prev)
@@ -161,9 +158,7 @@ class GraftExtensionsSpec extends SparkSpec {
     val prev = spark
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    val s2 = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
+    val s2 = graft.core.Sessions.create()
     try {
       graft.core.Tables.load(s2, sfDir, "embeddings")
         .createOrReplaceTempView("__graft_ext_bkt2")
@@ -173,7 +168,7 @@ class GraftExtensionsSpec extends SparkSpec {
         s"SELECT vec_id, $unrolled AS bucket FROM __graft_ext_bkt2")
       val plan = df.queryExecution.optimizedPlan.toString
       assert(plan.contains("graft_bucket"),
-        s"Runner-style session did not rewrite the bucket form:\n${plan.take(600)}")
+        s"factory session did not rewrite the bucket form:\n${plan.take(600)}")
       assert(df.count() > 0)
       // regression: plans carrying WindowSpecDefinition must pass
       // through the rules unscathed — `dataType` THROWS on that node

@@ -93,7 +93,8 @@ class HarmonicSpec extends SparkSpec {
   // exact-equality determinism is a COUPON-REGIME property (fixture
   // balls are small enough that DataSketches stays in its exact
   // sparse mode); dense-regime runs agree only within HLL error —
-  // HyperBallScaleBench measures and bounds that drift at 1M nodes
+  // hyperball_scale_r14.json measures and bounds that drift at 1M nodes
+  // (harness: git show a829ce8:src/main/scala/graft/HyperBallScaleBench.scala)
   test("hyperball is deterministic: two runs agree exactly") {
     val (nv, pv) = Harmonic.landedPairs(spark, sfDir)
     val a = Harmonic.hyperBall(spark, nv, pv).collect().toSeq

@@ -5,8 +5,10 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for specs. Small core count keeps test JVM
-  * startup cheap; production sizing is the caller's concern (Verify/Bench
-  * set local[32]-style parallelism from the environment).
+  * startup cheap. It is deliberately a plain session, without the
+  * engine's optimizer rewrites: it is the no-rewrite baseline the
+  * GraftExtensionsSpec compares the mains' factory session
+  * ([[graft.core.Sessions]]) against.
   */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
