@@ -7,11 +7,13 @@
 #   bash scripts/gate.sh [sfDir] [outDir]
 #
 # 1. session factory lint  — SparkSession.builder() only in core/Sessions.scala
-# 2. sbt test              — full suite must compile AND run green
-# 3. graft.Verify          — dump every oracle entry at sf0.01
-# 4. scripts/check.py      — value-compare vs the DuckDB oracle
-# 5. scripts/oracle_types.py — no HUGEINT/DECIMAL leaks in oracle types
-# 6. git status --porcelain  — no untracked/modified round artifacts
+# 2. view owner lint       — createOrReplaceTempView only in core/Materialize.scala
+#                            and Tables.registerAll
+# 3. sbt test              — full suite must compile AND run green
+# 4. graft.Verify          — dump every oracle entry at sf0.01
+# 5. scripts/check.py      — value-compare vs the DuckDB oracle
+# 6. scripts/oracle_types.py — no HUGEINT/DECIMAL leaks in oracle types
+# 7. git status --porcelain  — no untracked/modified round artifacts
 #
 # pipefail is load-bearing: every check below is piped through
 # tail/tee, and without it the gate tests the PIPE's exit status, not
@@ -23,7 +25,7 @@ OUT_DIR="${2:-/tmp/verify_gate}"
 cd "$(dirname "$0")/.."
 SUMMARY=""
 
-echo "== gate 1/6: one session factory"
+echo "== gate 1/7: one session factory"
 # Every main builds its session through graft.core.Sessions, so the
 # session Verify checks against the oracle is the one Bench times and
 # Runner ships. A second builder under src/main lets them drift apart.
@@ -36,14 +38,30 @@ if [ -n "$BUILDERS" ]; then
 fi
 SUMMARY+="session factory: one SparkSession.builder() (core/Sessions.scala)\n"
 
-echo "== gate 2/6: sbt test"
+echo "== gate 2/7: one owner for engine view names"
+# graft.core.Materialize names, memoizes and lands every engine
+# relation, so no two dirs or calls can share a view by accident. The
+# one other registration is Tables.registerAll: its bare table names
+# are the SQL the DuckDB oracle shares verbatim.
+VIEWS="$(grep -rn 'createOrReplaceTempView' src/main \
+  | grep -v '^src/main/scala/graft/core/Materialize\.scala:' \
+  | grep -v '^src/main/scala/graft/core/Tables\.scala:[0-9]*:      load(spark, dir, n, parallelize)\.createOrReplaceTempView(n)$' \
+  || true)"
+if [ -n "$VIEWS" ]; then
+  echo "$VIEWS"
+  echo "GATE FAIL: createOrReplaceTempView outside core/Materialize.scala and Tables.registerAll"
+  exit 1
+fi
+SUMMARY+="view owner: createOrReplaceTempView only in core/Materialize.scala + Tables.registerAll\n"
+
+echo "== gate 3/7: sbt test"
 if sbt -batch test 2>&1 | tail -5 | tee /tmp/gate_sbt.txt; then
   SUMMARY+="sbt test: $(grep -Eo 'Tests: succeeded [0-9]+, failed [0-9]+' /tmp/gate_sbt.txt | tail -1)\n"
 else
   echo "GATE FAIL: sbt test"; exit 1
 fi
 
-echo "== gate 3/6: graft.Verify at $SF_DIR"
+echo "== gate 4/7: graft.Verify at $SF_DIR"
 CP="$(ls /opt/spark/jars/*.jar | tr '\n' ':')target/scala-2.13/classes"
 SPARK_GRAFT_CPUS=8 java -Xmx12g \
   $(for m in java.lang java.lang.invoke java.lang.reflect java.io java.net \
@@ -55,7 +73,7 @@ SPARK_GRAFT_CPUS=8 java -Xmx12g \
   --add-opens=java.base/sun.util.calendar=ALL-UNNAMED \
   -cp "$CP" graft.Verify "$SF_DIR" "$OUT_DIR" 2>/dev/null | grep -i fail || true
 
-echo "== gate 4/6: oracle value compare (persists CORRECTNESS_local.json)"
+echo "== gate 5/7: oracle value compare (persists CORRECTNESS_local.json)"
 # --json writes the per-query verdicts in the driver artifact's shape;
 # r13's driver artifact came back empty, so the repo commits its own
 # (VERDICT r13 #1). Commit the refreshed file with the closing docs.
@@ -65,15 +83,15 @@ else
   echo "GATE FAIL: oracle compare"; exit 1
 fi
 
-echo "== gate 5/6: oracle result-type sweep"
+echo "== gate 6/7: oracle result-type sweep"
 if python3 scripts/oracle_types.py "$SF_DIR" "$OUT_DIR" 2>&1 | tail -2 | tee /tmp/gate_types.txt; then
   SUMMARY+="oracle types: $(tail -1 /tmp/gate_types.txt)\n"
 else
   echo "GATE FAIL: oracle types"; exit 1
 fi
 
-echo "== gate 6/6: working tree clean (round artifacts committed)"
-# CORRECTNESS_local.json is exempt: gate 4 just regenerated it from THIS
+echo "== gate 7/7: working tree clean (round artifacts committed)"
+# CORRECTNESS_local.json is exempt: gate 5 just regenerated it from THIS
 # tree, so it is never stale last-minute work — it is the artifact the
 # closing commit must include. Everything else dirty still fails.
 DIRTY="$(git status --porcelain | grep -v ' CORRECTNESS_local\.json$' || true)"

@@ -111,12 +111,10 @@ object CatSuite {
     * every consumer (the per-table queries AND the scoring rollups),
     * mirroring the reference's `test_results` app-DB table. */
   def run(spark: SparkSession, dir: String, table: String): DataFrame =
-    graft.core.SessionCache.getOrElseUpdate(spark, "cat", (dir, table)) {
-      val df = graft.core.Tables.load(spark, dir, table, parallelize = false)
-      val view = s"__graft_cat_$table"
-      df.createOrReplaceTempView(view)
-      runIsolated(spark, view, suites(table))
-    }
+    spark.table(graft.core.Materialize.view(spark, "cat", (dir, table)) {
+      runIsolated(spark, graft.core.Tables.view(spark, dir, table, parallelize = false),
+        suites(table))
+    })
 
   def duckSql(table: String): String = CatRunner.duckSql(table, suites(table))
 }

@@ -18,24 +18,13 @@ import scala.concurrent.ExecutionContext
   * Spark analogue: submitting MORE work than the bound queues it instead
   * of thrashing the scheduler.
   *
-  * Threads are daemons (never block JVM exit) and the bound is tunable
-  * with GRAFT_ACTION_THREADS (default 10, malformed values fall back).
+  * Threads are daemons (never block JVM exit).
   */
 object Pools {
 
-  val DefaultActionThreads = 10
+  val actionThreads: Int = 10
 
-  lazy val actionThreads: Int =
-    sys.env.get("GRAFT_ACTION_THREADS")
-      .flatMap(_.toIntOption).filter(_ > 0)
-      .getOrElse(DefaultActionThreads)
-
-  val DefaultTableThreads = 8
-
-  lazy val tableThreads: Int =
-    sys.env.get("GRAFT_TABLE_THREADS")
-      .flatMap(_.toIntOption).filter(_ > 0)
-      .getOrElse(DefaultTableThreads)
+  val tableThreads: Int = 8
 
   private def fixedPool(n: Int, prefix: String): ExecutionContext = {
     val counter = new AtomicInteger()

@@ -4,11 +4,16 @@ import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.SparkSession
 
-/** Per-SparkSession memo caches, held WEAKLY by the session itself.
+/** Per-SparkSession memo caches of DRIVER values, held WEAKLY by the
+  * session itself.
   *
-  * Modules memoize metadata-sized relations (collected profiles, CAT
-  * results, checkpointed shingle relations) per session. Keying those
-  * maps by `identityHashCode(session)` pins the entries for the JVM
+  * Modules memoize small values that reference no session — row
+  * counts, elected band geometry, landed parquet paths, MMR picks — per
+  * session. Relations and their view names never go here: a DataFrame
+  * value pins its session key, so the entry could never be collected;
+  * [[Materialize.view]] memoizes relations in the session's own
+  * catalog instead. Keying these maps by `identityHashCode(session)`
+  * pins the entries for the JVM
   * lifetime and can even alias a NEW session after the old one is
   * collected (identity hashes are reusable). A WeakHashMap keyed by the
   * session object itself makes a session's whole cache collectable the
@@ -30,9 +35,4 @@ object SessionCache {
     * race; exactly one result wins. */
   def getOrElseUpdate[V](spark: SparkSession, ns: String, key: Any)(value: => V): V =
     forSession(spark).getOrElseUpdate((ns, key), value).asInstanceOf[V]
-
-  /** A per-session monotonic counter (e.g. unique temp-view suffixes). */
-  def counter(spark: SparkSession, ns: String): java.util.concurrent.atomic.AtomicInteger =
-    getOrElseUpdate(spark, "__counter", ns)(
-      new java.util.concurrent.atomic.AtomicInteger(0))
 }

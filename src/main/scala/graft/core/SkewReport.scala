@@ -86,16 +86,11 @@ object SkewReport {
   }
 
   def run(spark: SparkSession, dir: String): DataFrame = {
-    val tables = Keys.map(_._1).distinct
-    tables.foreach { t =>
-      // cheap count-groupBy consumer: the map-side partial aggregation
-      // on the raw scan collapses each branch to (key, count) pairs, so
-      // a load-time rebalance would shuffle raw rows the aggregate never
-      // needs to move
-      Tables.load(spark, dir, t, parallelize = false)
-        .createOrReplaceTempView(s"__graft_skew_$t")
-    }
-    spark.sql(sql(t => s"__graft_skew_$t")(SparkDialect))
+    // cheap count-groupBy consumer: the map-side partial aggregation on
+    // the raw scan collapses each branch to (key, count) pairs, so a
+    // load-time rebalance would shuffle raw rows the aggregate never
+    // needs to move
+    spark.sql(sql(t => Tables.view(spark, dir, t, parallelize = false))(SparkDialect))
   }
 
   def duckSql(): String = sql(identity)(DuckDialect)

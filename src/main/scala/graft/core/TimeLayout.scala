@@ -76,13 +76,14 @@ object TimeLayout {
     // the layout scan's predicate is a CONSTANT the planner prunes
     // partitions with statically
     val day = SessionCache.getOrElseUpdate(spark, "time_layout_day", dir) {
-      Tables.load(spark, dir, "events").createOrReplaceTempView("__graft_tl_raw")
-      spark.sql(
-        s"SELECT ${SparkDialect.dateAddDays("CAST(MIN(ts) AS DATE)", 5)} FROM __graft_tl_raw")
+      spark.sql(s"SELECT ${SparkDialect.dateAddDays("CAST(MIN(ts) AS DATE)", 5)}" +
+        s" FROM ${Tables.view(spark, dir, "events")}")
         .head().getDate(0).toString
     }
-    spark.read.parquet(path).createOrReplaceTempView("__graft_tl_layout")
-    spark.sql(daySql("__graft_tl_layout", s"DATE '$day'", "event_date")(SparkDialect))
+    // read afresh each call: appendBatch grows the layout's file listing
+    Materialize.sql(spark, spark.read.parquet(path)) { case Seq(layout) =>
+      daySql(layout, s"DATE '$day'", "event_date")(SparkDialect)
+    }
   }
 
   /** Daily maintenance: append a new batch of events into the layout.

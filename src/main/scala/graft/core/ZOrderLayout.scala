@@ -148,11 +148,10 @@ object ZOrderLayout {
         (hi / 2, hi, md.plusDays(8), md.plusDays(15))
       }
     val codes = zCodesFor(uLo, uHi, dLo, dHi)
-    spark.read.parquet(path).createOrReplaceTempView("__graft_zorder_layout")
-    spark.sql(rectSql("__graft_zorder_layout",
-      uLo.toString, uHi.toString, s"DATE '$dLo'", s"DATE '$dHi'",
-      "CAST(ts AS DATE)",
-      s"zbucket IN (${codes.mkString(", ")})"))
+    Materialize.sql(spark, spark.read.parquet(path)) { case Seq(layout) =>
+      rectSql(layout, uLo.toString, uHi.toString, s"DATE '$dLo'", s"DATE '$dHi'",
+        "CAST(ts AS DATE)", s"zbucket IN (${codes.mkString(", ")})")
+    }
   }
 
   /** The pruned layout frame (for the partition-listing tripwire). */

@@ -368,16 +368,9 @@ object TestGenerator {
     * per-run staging tables. A process that lands NEW snapshots mid-
     * session must start a new session (or new dir) to see them. */
   def tableTypeView(spark: SparkSession, dir: String): String =
-    graft.core.SessionCache.getOrElseUpdate(spark, "tabletype_view", dir) {
+    graft.core.Materialize.view(spark, "tabletype", dir, graft.core.Materialize.Local()) {
       graft.core.Tables.registerAll(spark, dir) // runHistorySql scans the raw tables
-      val tt = spark.sql(
-        tableTypeQuery(HygieneScreens.enrichedView(spark, dir))(SparkDialect))
-      val local = spark.createDataFrame(
-        java.util.Arrays.asList(tt.collect(): _*), tt.schema)
-      val view = s"__graft_tabletype_${graft.core.SessionCache
-        .counter(spark, "tabletype_view").getAndIncrement()}"
-      local.createOrReplaceTempView(view)
-      view
+      spark.sql(tableTypeQuery(HygieneScreens.enrichedView(spark, dir))(SparkDialect))
     }
 
   def runTableType(spark: SparkSession, dir: String): DataFrame =

@@ -65,9 +65,8 @@ object TestValidation {
     // them in test_definitions and validates the stored set, not a
     // fresh generation per validation pass) — generate once per
     // (session, dir), checkpoint, and validate the landed set
-    val defs = graft.core.SessionCache.getOrElseUpdate(spark, "gendefs", dir) {
-      TestGenerator.run(spark, dir).localCheckpoint(eager = true)
-    }
+    val defs = spark.table(graft.core.Materialize.view(spark, "gendefs", dir,
+      graft.core.Materialize.Checkpoint)(TestGenerator.run(spark, dir)))
     val rows = poison.map { case (tt, t, c) =>
       Row.fromSeq(Seq(tt, t, c) ++ Seq.fill(defs.schema.length - 3)(null))
     }

@@ -447,18 +447,11 @@ object FunctionalType {
   // materialized relation so the inference-family queries (functional
   // types, hygiene, generation, scoring) share ONE profiling pass per
   // data directory instead of re-scanning all tables each.
-  /** Build + register the unioned per-table profile+freq relation; returns
-    * the temp view name usable as `rel` for the cascade SQLs. */
+  /** The landed unioned per-table profile+freq relation; returns its
+    * view name, usable as `rel` for the cascade SQLs. */
   def registerProfileAll(spark: SparkSession, dir: String): String =
-    graft.core.SessionCache.getOrElseUpdate(spark, "profile_all", dir) {
-      val df = buildProfileAll(spark, dir)
-      val local = spark.createDataFrame(
-        java.util.Arrays.asList(df.collect(): _*), df.schema)
-      val view = s"__graft_profile_all_${graft.core.SessionCache
-        .counter(spark, "profile_all").getAndIncrement()}"
-      local.createOrReplaceTempView(view)
-      view
-    }
+    graft.core.Materialize.view(spark, "profile_all", dir, graft.core.Materialize.Local())(
+      buildProfileAll(spark, dir))
 
   private def buildProfileAll(spark: SparkSession, dir: String): DataFrame = {
     // Profile tables CONCURRENTLY: each table's jobs are small relative to
@@ -530,11 +523,9 @@ object FunctionalType {
     * rows, so it lands ONCE per (session, dir) and reads are
     * checkpoint scans — the same discipline as the ANN hit relations. */
   def infer(spark: SparkSession, dir: String): DataFrame = {
-    val view = graft.core.SessionCache.getOrElseUpdate(spark, "functional_inferred", dir) {
-      val v = s"__graft_functional_${java.lang.Integer.toHexString(dir.hashCode)}"
+    val view = graft.core.Materialize.view(spark, "functional", dir,
+        graft.core.Materialize.Checkpoint) {
       spark.sql(cascadeSql(registerProfileAll(spark, dir))(SparkDialect))
-        .localCheckpoint(eager = true).createOrReplaceTempView(v)
-      v
     }
     // the landed relation preserves the cascade's output order only
     // per-partition; re-assert the entry's deterministic order

@@ -423,15 +423,8 @@ object HygieneScreens {
     * memoized per (session, dir) so every consumer — screens, test
     * generation, scoring — shares one inference pass. */
   def enrichedView(spark: SparkSession, dir: String): String =
-    graft.core.SessionCache.getOrElseUpdate(spark, "enriched_view", dir) {
-      val rel = FunctionalType.registerProfileAll(spark, dir)
-      val enr = spark.sql(enrichSql(rel)(SparkDialect))
-      val local = spark.createDataFrame(
-        java.util.Arrays.asList(enr.collect(): _*), enr.schema)
-      val view = s"__graft_enriched_profile_${graft.core.SessionCache
-        .counter(spark, "enriched_view").getAndIncrement()}"
-      local.createOrReplaceTempView(view)
-      view
+    graft.core.Materialize.view(spark, "enriched", dir, graft.core.Materialize.Local()) {
+      spark.sql(enrichSql(FunctionalType.registerProfileAll(spark, dir))(SparkDialect))
     }
 
   def run(spark: SparkSession, dir: String,
@@ -444,15 +437,8 @@ object HygieneScreens {
     * more to re-plan than its output costs to hold locally. */
   def anomaliesView(spark: SparkSession, dir: String,
                     muted: Seq[(String, String, String)] = Nil): String =
-    graft.core.SessionCache.getOrElseUpdate(spark, "anomalies_view", (dir, muted)) {
-      val anoms = run(spark, dir, muted)
-      val local = spark.createDataFrame(
-        java.util.Arrays.asList(anoms.collect(): _*), anoms.schema)
-      val view = s"__graft_anomalies_shared_${graft.core.SessionCache
-        .counter(spark, "anomalies_view").getAndIncrement()}"
-      local.createOrReplaceTempView(view)
-      view
-    }
+    graft.core.Materialize.view(spark, "anomalies", (dir, muted),
+      graft.core.Materialize.Local())(run(spark, dir, muted))
 
   def duckSql(muted: Seq[(String, String, String)] = Nil): String =
     sql(s"(${enrichSql(FunctionalType.duckProfileAllRel())(DuckDialect)})", muted)(DuckDialect)

@@ -34,9 +34,7 @@ object KAnonymity {
        | ORDER BY nation_key, segment""".stripMargin
 
   def run(spark: SparkSession, dir: String): DataFrame = {
-    graft.core.Tables.load(spark, dir, "customer")
-      .createOrReplaceTempView("__graft_kanon_cust")
-    spark.sql(sql("__graft_kanon_cust")(SparkDialect))
+    spark.sql(sql(graft.core.Tables.view(spark, dir, "customer"))(SparkDialect))
   }
 
   def duckSql(): String = sql("customer")(DuckDialect)

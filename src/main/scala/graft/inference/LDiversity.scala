@@ -30,9 +30,7 @@ object LDiversity {
        | ORDER BY nation_key, segment""".stripMargin
 
   def run(spark: SparkSession, dir: String): DataFrame = {
-    graft.core.Tables.load(spark, dir, "customer")
-      .createOrReplaceTempView("__graft_ldiv_cust")
-    spark.sql(sql("__graft_ldiv_cust"))
+    spark.sql(sql(graft.core.Tables.view(spark, dir, "customer")))
   }
 
   def duckSql(): String = sql("customer")

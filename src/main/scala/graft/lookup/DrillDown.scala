@@ -119,32 +119,32 @@ object DrillDown {
        | LIMIT $Limit""".stripMargin
 
   def runRecency(spark: SparkSession, dir: String): DataFrame = {
-    graft.core.Tables.load(spark, dir, "events", parallelize = false).createOrReplaceTempView("__dd_events")
-    spark.sql(recencyRowsSql("__dd_events", "event_id", "ts")(SparkDialect))
+    val events = graft.core.Tables.view(spark, dir, "events", parallelize = false)
+    spark.sql(recencyRowsSql(events, "event_id", "ts")(SparkDialect))
   }
 
   def runOutliers(spark: SparkSession, dir: String): DataFrame = {
-    graft.core.Tables.load(spark, dir, "events", parallelize = false).createOrReplaceTempView("__dd_events2")
-    spark.sql(outlierRowsSql("__dd_events2", "event_id", "value")(SparkDialect))
+    val events = graft.core.Tables.view(spark, dir, "events", parallelize = false)
+    spark.sql(outlierRowsSql(events, "event_id", "value")(SparkDialect))
   }
 
   def duckRecencySql(): String = recencyRowsSql("events", "event_id", "ts")(DuckDialect)
   def duckOutliersSql(): String = outlierRowsSql("events", "event_id", "value")(DuckDialect)
 
   def runDuplicates(spark: SparkSession, dir: String): DataFrame = {
-    graft.core.Tables.load(spark, dir, "orders", parallelize = false).createOrReplaceTempView("__dd_orders")
-    spark.sql(duplicatesSql("__dd_orders", "o_custkey")(SparkDialect))
+    val orders = graft.core.Tables.view(spark, dir, "orders", parallelize = false)
+    spark.sql(duplicatesSql(orders, "o_custkey")(SparkDialect))
   }
 
   def runMaxLength(spark: SparkSession, dir: String): DataFrame = {
-    graft.core.Tables.load(spark, dir, "customer", parallelize = false).createOrReplaceTempView("__dd_customer")
-    spark.sql(maxLengthRowsSql("__dd_customer", "c_name")(SparkDialect))
+    val customer = graft.core.Tables.view(spark, dir, "customer", parallelize = false)
+    spark.sql(maxLengthRowsSql(customer, "c_name")(SparkDialect))
   }
 
   def runMasked(spark: SparkSession, dir: String): DataFrame = {
     val piiPath = landPiiFlags(spark, dir)
-    graft.core.Tables.load(spark, dir, "customer", parallelize = false).createOrReplaceTempView("__dd_customer")
-    spark.sql(maskedMismatchSql("__dd_customer", "customer", "c_mktsegment",
+    val customer = graft.core.Tables.view(spark, dir, "customer", parallelize = false)
+    spark.sql(maskedMismatchSql(customer, "customer", "c_mktsegment",
       "^[A-Z]+$", piiPath,
       otherCols = Seq("c_custkey", "c_name", "c_mktsegment"))(SparkDialect))
   }
@@ -235,15 +235,13 @@ object DrillDown {
       d.castText("id"), "offending_value, id")
 
   def runDuplicatesSampled(spark: SparkSession, dir: String): DataFrame = {
-    graft.core.Tables.load(spark, dir, "orders", parallelize = false)
-      .createOrReplaceTempView("__dd_orders_s")
-    spark.sql(duplicatesSampledSql("__dd_orders_s", "o_custkey")(SparkDialect))
+    val orders = graft.core.Tables.view(spark, dir, "orders", parallelize = false)
+    spark.sql(duplicatesSampledSql(orders, "o_custkey")(SparkDialect))
   }
 
   def runMinDateSampled(spark: SparkSession, dir: String): DataFrame = {
-    graft.core.Tables.load(spark, dir, "orders", parallelize = false)
-      .createOrReplaceTempView("__dd_orders_s2")
-    spark.sql(minDateSampledSql("__dd_orders_s2", "o_orderkey", "o_orderdate",
+    val orders = graft.core.Tables.view(spark, dir, "orders", parallelize = false)
+    spark.sql(minDateSampledSql(orders, "o_orderkey", "o_orderdate",
       "1995-06-01")(SparkDialect))
   }
 
@@ -254,19 +252,18 @@ object DrillDown {
       "1995-06-01")(DuckDialect)
 
   def runDupeRows(spark: SparkSession, dir: String): DataFrame = {
-    graft.core.Tables.load(spark, dir, "orders", parallelize = false).createOrReplaceTempView("__dd_orders2")
-    spark.sql(dupeRowsSql("__dd_orders2",
+    spark.sql(dupeRowsSql(graft.core.Tables.view(spark, dir, "orders", parallelize = false),
       Seq("o_custkey", "o_orderstatus", "o_orderpriority"))(SparkDialect))
   }
 
   def runEmailFormat(spark: SparkSession, dir: String): DataFrame = {
-    graft.core.Tables.load(spark, dir, "events", parallelize = false).createOrReplaceTempView("__dd_events3")
-    spark.sql(emailFormatSql("__dd_events3", "event_type")(SparkDialect))
+    val events = graft.core.Tables.view(spark, dir, "events", parallelize = false)
+    spark.sql(emailFormatSql(events, "event_type")(SparkDialect))
   }
 
   def runMinDate(spark: SparkSession, dir: String): DataFrame = {
-    graft.core.Tables.load(spark, dir, "orders", parallelize = false).createOrReplaceTempView("__dd_orders3")
-    spark.sql(minDateSql("__dd_orders3", "o_orderkey", "o_orderdate",
+    val orders = graft.core.Tables.view(spark, dir, "orders", parallelize = false)
+    spark.sql(minDateSql(orders, "o_orderkey", "o_orderdate",
       "1995-06-01")(SparkDialect))
   }
 
@@ -593,13 +590,10 @@ object DrillDown {
 
   def runHygieneLookup(spark: SparkSession, dir: String): DataFrame = {
     val piiPath = landPiiFlags(spark, dir)
-    hygieneTables.foreach { t =>
-      graft.core.Tables.load(spark, dir, t, parallelize = false)
-        .createOrReplaceTempView(s"__dd_hy_$t")
+    graft.core.Materialize.sql(spark, graft.core.DataChars.run(spark, dir)) { case Seq(chars) =>
+      hygieneLookupSql(t => graft.core.Tables.view(spark, dir, t, parallelize = false),
+        chars, piiPath)(SparkDialect)
     }
-    graft.core.DataChars.run(spark, dir).createOrReplaceTempView("__dd_hy_datachars")
-    spark.sql(hygieneLookupSql(t => s"__dd_hy_$t", "__dd_hy_datachars",
-      piiPath)(SparkDialect))
   }
 
   def duckHygieneLookupSql(): String =
@@ -608,11 +602,8 @@ object DrillDown {
 
   def runFailedTests(spark: SparkSession, dir: String): DataFrame = {
     val piiPath = landPiiFlags(spark, dir)
-    graft.cat.CatSuite.suites.keys.foreach { t =>
-      graft.core.Tables.load(spark, dir, t, parallelize = false)
-        .createOrReplaceTempView(s"__dd_lk_$t")
-    }
-    spark.sql(lookupFailedTestsSql(t => s"__dd_lk_$t", piiPath)(SparkDialect))
+    spark.sql(lookupFailedTestsSql(
+      t => graft.core.Tables.view(spark, dir, t, parallelize = false), piiPath)(SparkDialect))
   }
 
   def duckFailedTestsSql(): String =

@@ -92,10 +92,7 @@ object AsofJoin {
        | ORDER BY event_id""".stripMargin
 
   def run(spark: SparkSession, dir: String): DataFrame = {
-    graft.core.Tables.load(spark, dir, "events", parallelize = false)
-      .createOrReplaceTempView("__graft_asof_events")
-    graft.core.Tables.load(spark, dir, "orders", parallelize = false)
-      .createOrReplaceTempView("__graft_asof_orders")
-    spark.sql(sparkSql("__graft_asof_events", "__graft_asof_orders"))
+    spark.sql(sparkSql(graft.core.Tables.view(spark, dir, "events", parallelize = false),
+      graft.core.Tables.view(spark, dir, "orders", parallelize = false)))
   }
 }

@@ -92,8 +92,6 @@ object IntervalJoin {
        | ORDER BY promo_id, burst_id""".stripMargin
 
   def run(spark: SparkSession, dir: String): DataFrame = {
-    graft.core.Tables.load(spark, dir, "events", parallelize = false)
-      .createOrReplaceTempView("__graft_iv_events")
-    spark.sql(sparkSql("__graft_iv_events"))
+    spark.sql(sparkSql(graft.core.Tables.view(spark, dir, "events", parallelize = false)))
   }
 }

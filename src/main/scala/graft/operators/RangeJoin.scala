@@ -79,8 +79,6 @@ object RangeJoin {
        | ORDER BY s.event_id""".stripMargin
 
   def run(spark: SparkSession, dir: String): DataFrame = {
-    graft.core.Tables.load(spark, dir, "events", parallelize = false)
-      .createOrReplaceTempView("__graft_range_events")
-    spark.sql(sparkSql("__graft_range_events"))
+    spark.sql(sparkSql(graft.core.Tables.view(spark, dir, "events", parallelize = false)))
   }
 }

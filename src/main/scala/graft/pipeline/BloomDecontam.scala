@@ -138,27 +138,22 @@ object BloomDecontam {
     * scan of the eval split — and the probe references the landed view
     * with an explicit broadcast hint; the corpus is scanned once. */
   def run(spark: SparkSession, dir: String): DataFrame = {
-    val raw = "__graft_bloom_docs_" +
-      java.lang.Integer.toHexString(dir.hashCode)
-    graft.core.Tables.load(spark, dir, "documents")
-      .createOrReplaceTempView(raw)
-    val d = SparkDialect
-    val filterView = graft.core.SessionCache
-      .getOrElseUpdate(spark, "bloomfilter", dir) {
-        val v = "__graft_bloom_words_" +
-          java.lang.Integer.toHexString(dir.hashCode)
-        spark.sql(
-          s"""WITH ${gramCtes(
-                s"(SELECT doc_id, text FROM $raw WHERE doc_id % $EvalMod = 0) __be")(d)},
-             |$seedsCte,
-             |eg AS (SELECT DISTINCT gh FROM grams)
-             |${filterSql("eg")(d)}""".stripMargin)
-          .localCheckpoint(eager = true).createOrReplaceTempView(v)
-        v
-      }
+    val raw = graft.core.Tables.view(spark, dir, "documents")
     spark.sql(
-      s"""WITH ${gramCtes(raw)(d)},
+      s"""WITH ${gramCtes(raw)(SparkDialect)},
          |$seedsCte,
-         |${probeTail(raw, filterView, "/*+ BROADCAST(f) */")(d)}""".stripMargin)
+         |${probeTail(raw, filterView(spark, dir), "/*+ BROADCAST(f) */")(SparkDialect)}""".stripMargin)
   }
+
+  /** The landed filter words of `dir`'s eval split. */
+  private[graft] def filterView(spark: SparkSession, dir: String): String =
+    graft.core.Materialize.view(spark, "bloom_words", dir, graft.core.Materialize.Checkpoint) {
+      val raw = graft.core.Tables.view(spark, dir, "documents")
+      spark.sql(
+        s"""WITH ${gramCtes(
+              s"(SELECT doc_id, text FROM $raw WHERE doc_id % $EvalMod = 0) __be")(SparkDialect)},
+           |$seedsCte,
+           |eg AS (SELECT DISTINCT gh FROM grams)
+           |${filterSql("eg")(SparkDialect)}""".stripMargin)
+    }
 }

@@ -121,24 +121,16 @@ object Boilerplate {
        | ORDER BY doc_id""".stripMargin
 
   def run(spark: SparkSession, dir: String): DataFrame = {
-    graft.core.Tables.load(spark, dir, "documents")
-      .createOrReplaceTempView("__graft_docs_bp")
-    val v = "__graft_bp_tg_" + java.lang.Integer.toHexString(dir.hashCode)
-    spark.sql(tgSparkSql("__graft_docs_bp"))
+    val tg = spark.sql(tgSparkSql(graft.core.Tables.view(spark, dir, "documents")))
       .localCheckpoint(eager = true)
-      .createOrReplaceTempView(v)
-    spark.sql(bodySparkSql(v))
+    graft.core.Materialize.sql(spark, tg) { case Seq(v) => bodySparkSql(v) }
   }
 
   /** The materialized per-doc OUTPUT, memoized per (session, dir) — the
     * quality gate joins this instead of re-running the trigram passes. */
   def outView(spark: SparkSession, dir: String): String =
-    graft.core.SessionCache.getOrElseUpdate(spark, "bpout", dir) {
-      val v = "__graft_bp_out_" + java.lang.Integer.toHexString(dir.hashCode)
-      run(spark, dir).localCheckpoint(eager = true)
-        .createOrReplaceTempView(v)
-      v
-    }
+    graft.core.Materialize.view(spark, "bp_out", dir, graft.core.Materialize.Checkpoint)(
+      run(spark, dir))
 
   def duckSql(): String = sql("documents")(DuckDialect)
 }

@@ -64,9 +64,7 @@ object BpeMerges {
        | LIMIT $topK""".stripMargin
 
   def run(spark: SparkSession, dir: String): DataFrame = {
-    graft.core.Tables.load(spark, dir, "documents")
-      .createOrReplaceTempView("__graft_bpe_docs")
-    spark.sql(pairsSparkSql("__graft_bpe_docs"))
+    spark.sql(pairsSparkSql(graft.core.Tables.view(spark, dir, "documents")))
   }
 
   def duckSql(): String = sql("documents")(DuckDialect)
@@ -133,9 +131,7 @@ object BpeMerges {
        | ORDER BY doc_id""".stripMargin
 
   def runApply(spark: SparkSession, dir: String): DataFrame = {
-    graft.core.Tables.load(spark, dir, "documents")
-      .createOrReplaceTempView("__graft_bpe_docs")
-    spark.sql(applySql("__graft_bpe_docs")(SparkDialect))
+    spark.sql(applySql(graft.core.Tables.view(spark, dir, "documents"))(SparkDialect))
   }
 
   def duckApplySql(): String = applySql("documents")(DuckDialect)
@@ -278,21 +274,21 @@ object BpeMerges {
 
   def runTrain(spark: SparkSession, dir: String,
                steps: Int = TrainSteps): DataFrame =
-    trained(spark, dir, steps)._1
+    spark.table(trained(spark, dir, steps)._1)
 
-  /** Training result memoized per (session, dir, steps) — the landed
-    * merge table plus the final symbol relation's view name. Both
+  /** Training result memoized per (session, dir, steps) — the view
+    * names of the merge table and the final symbol relation. Both
     * `bpe_train` and `bpe_train_compression` (and the Runner `curate`
     * stage) read THIS, so the corpus is scanned once per session, not
     * once per consumer — the same landed-relation discipline as
     * `Retrieval`'s hit lists. */
   private def trained(spark: SparkSession, dir: String,
-                      steps: Int): (DataFrame, String) =
-    graft.core.SessionCache.getOrElseUpdate(spark, "bpe_trained", (dir, steps)) {
-      graft.core.Tables.load(spark, dir, "documents")
-        .createOrReplaceTempView("__graft_bpet_docs")
-      trainOnRel(spark, "__graft_bpet_docs", steps)
-    }
+                      steps: Int): (String, String) = {
+    // one training loop yields both relations; the first call lands both
+    lazy val run = trainOnRel(spark, graft.core.Tables.view(spark, dir, "documents"), steps)
+    (graft.core.Materialize.view(spark, "bpe_merges", (dir, steps))(run._1),
+      graft.core.Materialize.view(spark, "bpe_syms", (dir, steps))(run._2))
+  }
 
   /** Split `w` into single-codepoint symbols (SUBSTRING in both SQL
     * dialects is codepoint-addressed, so the driver loop must be too). */
@@ -319,7 +315,7 @@ object BpeMerges {
   /** The training loop over any (doc_id, text) relation — split out so
     * specs can train on inline fixtures. ONE Spark job (the census
     * scan/collect); the merge loop is pure driver-local Scala. Returns
-    * the merge table and the FINAL symbol relation's view name.
+    * the merge table and the FINAL symbol relation.
     *
     * BOUNDED census: the collect keeps only words with
     * `COUNT(*) >= minCount`, top-[[CensusTopV]] by (count DESC, word) —
@@ -350,7 +346,7 @@ object BpeMerges {
 
   private[graft] def trainOnRel(spark: SparkSession, table: String,
                                 steps: Int,
-                                minCount: Long = 1L): (DataFrame, String) = {
+                                minCount: Long = 1L): (DataFrame, DataFrame) = {
     import spark.implicits._
     // One corpus scan: collect the bounded word census (floor + top-V).
     var census: Array[(String, Long, Vector[String])] =
@@ -392,15 +388,12 @@ object BpeMerges {
         step += 1
       }
     }
-    val finalRel =
-      s"__graft_bpet_final_${java.lang.Integer.toHexString(table.hashCode)}"
-    census.toSeq
+    val finalSyms = census.toSeq
       .flatMap { case (w, wct, syms) =>
         syms.zipWithIndex.map { case (s, i) => (w, wct, i + 1, s) } }
       .toDF("word", "wct", "pos", "sym")
-      .createOrReplaceTempView(finalRel)
     (merges.toSeq.toDF("step", "left_sym", "right_sym", "merged", "pair_ct")
-      .orderBy("step"), finalRel)
+      .orderBy("step"), finalSyms)
   }
 
   private[graft] def trainOn(spark: SparkSession, table: String,

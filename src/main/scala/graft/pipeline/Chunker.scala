@@ -108,17 +108,13 @@ object Chunker {
   }
 
   def runLangConsistency(spark: SparkSession, dir: String): DataFrame = {
-    graft.core.Tables.load(spark, dir, "documents")
-      .createOrReplaceTempView("__graft_chunk_docs")
-    spark.sql(langConsistencySql("__graft_chunk_docs")(SparkDialect))
+    spark.sql(langConsistencySql(graft.core.Tables.view(spark, dir, "documents"))(SparkDialect))
   }
 
   def duckLangConsistencySql(): String = langConsistencySql("documents")(DuckDialect)
 
   def run(spark: SparkSession, dir: String): DataFrame = {
-    graft.core.Tables.load(spark, dir, "documents")
-      .createOrReplaceTempView("__graft_chunk_docs")
-    spark.sql(sql("__graft_chunk_docs")(SparkDialect))
+    spark.sql(sql(graft.core.Tables.view(spark, dir, "documents"))(SparkDialect))
   }
 
   def duckSql(): String = sql("documents")(DuckDialect)
@@ -142,9 +138,7 @@ object Chunker {
        | ORDER BY chunk_hash""".stripMargin
 
   def runDup(spark: SparkSession, dir: String): DataFrame = {
-    graft.core.Tables.load(spark, dir, "documents")
-      .createOrReplaceTempView("__graft_chunk_docs")
-    spark.sql(dupSql("__graft_chunk_docs")(SparkDialect))
+    spark.sql(dupSql(graft.core.Tables.view(spark, dir, "documents"))(SparkDialect))
   }
 
   def duckDupSql(): String = dupSql("documents")(DuckDialect)
@@ -225,10 +219,8 @@ object Chunker {
        | ORDER BY doc_id, chunk_idx""".stripMargin
 
   def runCdc(spark: SparkSession, dir: String): DataFrame = {
-    graft.core.Tables.load(spark, dir, "documents")
-      .createOrReplaceTempView("__graft_chunk_docs")
     graft.functions.CdcChunksExpr.register(spark)
-    spark.sql(cdcNativeSql("__graft_chunk_docs"))
+    spark.sql(cdcNativeSql(graft.core.Tables.view(spark, dir, "documents")))
   }
 
   def duckCdcSql(): String = cdcSql("documents")(DuckDialect)

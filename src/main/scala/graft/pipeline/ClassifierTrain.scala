@@ -127,21 +127,13 @@ object ClassifierTrain {
        | GROUP BY 1, 2
        | ORDER BY 1, 2""".stripMargin
 
-  private def docsView(spark: SparkSession, dir: String): String = {
-    graft.core.Tables.load(spark, dir, "documents")
-      .createOrReplaceTempView("__graft_clf_docs")
-    "__graft_clf_docs"
-  }
+  private def docsView(spark: SparkSession, dir: String): String =
+    graft.core.Tables.view(spark, dir, "documents")
 
   /** Landed trained-weights view, once per (session, dir). */
   private[graft] def weightsView(spark: SparkSession, dir: String): String =
-    graft.core.SessionCache.getOrElseUpdate(spark, "clf_weights", dir) {
-      val w = spark.sql(trainSql(docsView(spark, dir))(SparkDialect))
-        .localCheckpoint(eager = true)
-      val v = "__graft_clf_weights_" + java.lang.Integer.toHexString(dir.hashCode)
-      w.createOrReplaceTempView(v)
-      v
-    }
+    graft.core.Materialize.view(spark, "clf_weights", dir, graft.core.Materialize.Checkpoint)(
+      spark.sql(trainSql(docsView(spark, dir))(SparkDialect)))
 
   /** Engine train entry: reads the landed weight relation. */
   def runTrain(spark: SparkSession, dir: String): DataFrame =

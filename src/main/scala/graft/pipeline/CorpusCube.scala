@@ -44,9 +44,7 @@ object CorpusCube {
   }
 
   def run(spark: SparkSession, dir: String): DataFrame = {
-    graft.core.Tables.load(spark, dir, "documents")
-      .createOrReplaceTempView("__graft_cube_docs")
-    spark.sql(sql("__graft_cube_docs")(SparkDialect))
+    spark.sql(sql(graft.core.Tables.view(spark, dir, "documents"))(SparkDialect))
   }
 
   def duckSql(): String = sql("documents")(DuckDialect)

@@ -42,9 +42,7 @@ object TokenHistogram {
   }
 
   def run(spark: SparkSession, dir: String): DataFrame = {
-    graft.core.Tables.load(spark, dir, "documents")
-      .createOrReplaceTempView("__graft_tokhist_docs")
-    spark.sql(sql("__graft_tokhist_docs")(SparkDialect))
+    spark.sql(sql(graft.core.Tables.view(spark, dir, "documents"))(SparkDialect))
   }
 
   def duckSql(): String = sql("documents")(DuckDialect)
@@ -105,9 +103,7 @@ object CorpusStats {
       s"(${Repetition.sql(table)(d)})")(d)
 
   def run(spark: SparkSession, dir: String): DataFrame = {
-    val docs = "__graft_corpus_docs"
-    graft.core.Tables.load(spark, dir, "documents")
-      .createOrReplaceTempView(docs)
+    val docs = graft.core.Tables.view(spark, dir, "documents")
     // ONE corpus scan (text analysis with source/lang passthrough)
     // joined against the memoized repetition output — not the inline
     // CTE composition, which Spark would re-scan per reference
@@ -141,9 +137,7 @@ object CorpusStats {
        |ORDER BY ta.source, ta.lang""".stripMargin
 
   def runKept(spark: SparkSession, dir: String): DataFrame = {
-    val docs = "__graft_corpus_docs"
-    graft.core.Tables.load(spark, dir, "documents")
-      .createOrReplaceTempView(docs)
+    val docs = graft.core.Tables.view(spark, dir, "documents")
     spark.sql(keptRollupSql(
       s"(${TextAnalysis.sql(docs, Seq("source", "lang"))(SparkDialect)})",
       QualityGate.outView(spark, dir))(SparkDialect))
@@ -171,9 +165,7 @@ object CorpusStats {
        |ORDER BY lang, lang_guess""".stripMargin
 
   def runConfusion(spark: SparkSession, dir: String): DataFrame = {
-    val docs = "__graft_corpus_docs"
-    graft.core.Tables.load(spark, dir, "documents")
-      .createOrReplaceTempView(docs)
+    val docs = graft.core.Tables.view(spark, dir, "documents")
     spark.sql(confusionSql(
       s"(${TextAnalysis.sql(docs, Seq("lang"))(SparkDialect)})")(SparkDialect))
   }
@@ -221,9 +213,7 @@ object CorpusStats {
   }
 
   def runPercentiles(spark: SparkSession, dir: String): DataFrame = {
-    graft.core.Tables.load(spark, dir, "documents")
-      .createOrReplaceTempView("__graft_pctl_docs")
-    spark.sql(percentilesSql("__graft_pctl_docs")(SparkDialect))
+    spark.sql(percentilesSql(graft.core.Tables.view(spark, dir, "documents"))(SparkDialect))
   }
 
   def duckPercentilesSql(): String = percentilesSql("documents")(DuckDialect)
@@ -329,21 +319,19 @@ object CorpusDrift {
 
   def run(spark: SparkSession, dir: String): DataFrame = {
     import graft.core.RunStore
-    val docs = "__graft_drift_docs"
     // parallelize=false: the census is one map-side-combined GROUP BY
     // over a cheap projection (guide: the rebalance exchange is pure
     // cost for cheap aggregates)
-    graft.core.Tables.load(spark, dir, "documents", parallelize = false)
-      .createOrReplaceTempView(docs)
-    val cv = "__graft_drift_census"
-    spark.sql(censusSql(docs)).localCheckpoint(eager = true)
-      .createOrReplaceTempView(cv)
+    val census = spark.sql(censusSql(graft.core.Tables.view(spark, dir, "documents",
+      parallelize = false))).localCheckpoint(eager = true)
+    def overCensus(sql: String => String) =
+      graft.core.Materialize.sql(spark, census) { case Seq(cv) => sql(cv) }
     val root = RunStore.root
     // prior = the non-seventh cells of every non-src19 source (with the
     // %97 cells remapped to src_retired) plus ALL src0 cells doubled —
     // cell-for-cell the aggregate of priorSql's row set
     val p0 = RunStore.land(
-      spark.sql(
+      overCensus(cv =>
         s"""SELECT source, lang,
            |       CAST(SUM(doc_ct) AS BIGINT) AS doc_ct,
            |       CAST(SUM(token_ct) AS BIGINT) AS token_ct
@@ -357,7 +345,7 @@ object CorpusDrift {
            |) u GROUP BY source, lang""".stripMargin),
       root, "run_000", "corpus_stats")
     val p1 = RunStore.land(
-      spark.sql(
+      overCensus(cv =>
         s"""SELECT source, lang,
            |       CAST(SUM(doc_ct) AS BIGINT) AS doc_ct,
            |       CAST(SUM(token_ct) AS BIGINT) AS token_ct
@@ -428,29 +416,27 @@ object DocDrift {
 
   def run(spark: SparkSession, dir: String): DataFrame = {
     import graft.core.RunStore
-    val docs = "__graft_docdrift_docs"
     // parallelize=false: one MD5 projection per row feeding two
     // metadata-sized landings — no per-row work worth a rebalance
-    graft.core.Tables.load(spark, dir, "documents", parallelize = false)
-      .createOrReplaceTempView(docs)
+    val docs = graft.core.Tables.view(spark, dir, "documents", parallelize = false)
     // ONE hashing scan for both snapshots (guide §1.2) — the old
     // spelling MD5-scanned the corpus three times (prior's filter +
     // src0 branches, then current). Each doc's current and prior
     // hashes come out of the same row; the landed values are
     // bit-identical to the three-scan form (same MD5 inputs), and the
     // DuckDB oracle diffs the same landed parquet as before.
-    val bv = "__graft_docdrift_base"
-    spark.sql(
+    val base = spark.sql(
       s"""SELECT doc_id, source, h_cur,
          |       CASE WHEN doc_id % 11 = 0 THEN MD5(text || ' vLEGACY')
          |            ELSE h_cur END AS h_prior
          |  FROM (SELECT doc_id, source, text, MD5(text) AS h_cur
          |          FROM $docs) b""".stripMargin)
       .localCheckpoint(eager = true)
-      .createOrReplaceTempView(bv)
+    def overBase(sql: String => String) =
+      graft.core.Materialize.sql(spark, base) { case Seq(bv) => sql(bv) }
     val root = RunStore.root
     val p0 = RunStore.land(
-      spark.sql(
+      overBase(bv =>
         s"""SELECT doc_id, source, h_prior AS content_hash FROM $bv
            | WHERE doc_id % 7 <> 0
            |UNION ALL
@@ -458,7 +444,7 @@ object DocDrift {
            |  FROM $bv WHERE source = 'src0'""".stripMargin),
       root, "run_000", "doc_snapshot")
     val p1 = RunStore.land(
-      spark.sql(s"SELECT doc_id, source, h_cur AS content_hash FROM $bv"),
+      overBase(bv => s"SELECT doc_id, source, h_cur AS content_hash FROM $bv"),
       root, "run_001", "doc_snapshot")
     spark.sql(diffSql(p0, p1)(SparkDialect))
   }
@@ -531,16 +517,11 @@ object NgramNovelty {
        |${tail("g").stripPrefix("WITH ")}""".stripMargin
 
   def run(spark: SparkSession, dir: String): DataFrame = {
-    graft.core.Tables.load(spark, dir, "documents")
-      .createOrReplaceTempView("__graft_novelty_docs")
     // land the gram relation once — the three rollups would otherwise
     // each re-derive the word explode + windows (CTEs inline in Spark)
-    val gv = graft.core.SessionCache.getOrElseUpdate(spark, "novelgrams", dir) {
-      val v = s"__graft_novelty_g_${Integer.toHexString(dir.hashCode)}"
-      spark.sql(gramSql("__graft_novelty_docs")(SparkDialect))
-        .localCheckpoint(eager = true).createOrReplaceTempView(v)
-      v
-    }
+    val gv = graft.core.Materialize.view(spark, "novelty_grams", dir,
+      graft.core.Materialize.Checkpoint)(
+      spark.sql(gramSql(graft.core.Tables.view(spark, dir, "documents"))(SparkDialect)))
     spark.sql(tail(gv))
   }
 
@@ -599,9 +580,7 @@ object IncrementalProfile {
   def run(spark: SparkSession, dir: String): DataFrame = {
     import graft.core.RunStore
     val d: Dialect = SparkDialect
-    val docs = "__graft_incrprof_docs"
-    graft.core.Tables.load(spark, dir, "documents")
-      .createOrReplaceTempView(docs)
+    val docs = graft.core.Tables.view(spark, dir, "documents")
     val root = RunStore.root
     val priorRel = s"(${DocDrift.priorSql(docs)})"
     // run N−1's landed artifacts: sufficient stats + doc-grain snapshot.
@@ -696,9 +675,7 @@ object SourceMixture {
   }
 
   def run(spark: SparkSession, dir: String): DataFrame = {
-    graft.core.Tables.load(spark, dir, "documents")
-      .createOrReplaceTempView("__graft_mix_docs")
-    spark.sql(sql("__graft_mix_docs")(SparkDialect))
+    spark.sql(sql(graft.core.Tables.view(spark, dir, "documents"))(SparkDialect))
   }
 
   def duckSql(): String = sql("documents")(DuckDialect)
@@ -745,18 +722,8 @@ object SourceMixture {
     * plan audit measured sample_mixture re-running the whole mixture
     * computation per pass — 42 exchanges for a join+explode entry). */
   private def mixtureView(spark: SparkSession, dir: String): String =
-    graft.core.SessionCache.getOrElseUpdate(spark, "mixture_view", dir) {
-      val res = run(spark, dir)
-      val local = spark.createDataFrame(
-        java.util.Arrays.asList(res.collect(): _*), res.schema)
-      // dir-keyed view name (like __graft_decont_hits): the cache entry
-      // is per (session, dir), so a second dir in the same session must
-      // not overwrite the first dir's view behind its cache entry
-      val view =
-        s"__graft_mixture_shared_${java.lang.Integer.toHexString(dir.hashCode)}"
-      local.createOrReplaceTempView(view)
-      view
-    }
+    graft.core.Materialize.view(spark, "mixture", dir, graft.core.Materialize.Local())(
+      run(spark, dir))
 
   /** [[sampleSql]]'s tail over an already-computed mixture relation. */
   private def sampleTail(table: String, wselRel: String)(d: Dialect): String = {
@@ -779,9 +746,8 @@ object SourceMixture {
   }
 
   def runSample(spark: SparkSession, dir: String): DataFrame = {
-    graft.core.Tables.load(spark, dir, "documents")
-      .createOrReplaceTempView("__graft_mix_docs")
-    spark.sql(sampleTail("__graft_mix_docs", mixtureView(spark, dir))(SparkDialect))
+    val documents = graft.core.Tables.view(spark, dir, "documents")
+    spark.sql(sampleTail(documents, mixtureView(spark, dir))(SparkDialect))
   }
 
   def sampleDuckSql(): String = sampleSql("documents")(DuckDialect)

@@ -31,7 +31,7 @@ object Dedup {
     * rendering): 5-grams derive from the split array inside each
     * document row — pure projection + explode + DISTINCT, so the token
     * stream never shuffles into a per-doc sort (parity-spec-pinned
-    * identical; only the memoized `__graft_sh_*` build uses it, every
+    * identical; only the memoized `dedup_sh` landing uses it, every
     * consumer reads the landed view). */
   private[graft] def shinglesSparkSql(table: String): String =
     s"""SELECT DISTINCT doc_id AS id,
@@ -133,9 +133,8 @@ object Dedup {
        | ORDER BY canon_hash""".stripMargin
 
   def runCanonical(spark: SparkSession, dir: String): DataFrame = {
-    graft.core.Tables.load(spark, dir, "documents", parallelize = false)
-      .createOrReplaceTempView("__graft_docs_canon")
-    spark.sql(canonicalSql("__graft_docs_canon")(SparkDialect))
+    val documents = graft.core.Tables.view(spark, dir, "documents", parallelize = false)
+    spark.sql(canonicalSql(documents)(SparkDialect))
   }
 
   /** Jaccard verification body over (inter, sizes) relations. */
@@ -211,7 +210,7 @@ object Dedup {
        |  FROM n""".stripMargin
 
   def runBandGeometry(spark: SparkSession, dir: String): DataFrame = {
-    val docs = register(spark, dir)
+    val docs = graft.core.Tables.view(spark, dir, "documents")
     spark.sql(bandGeometrySql(docs)(SparkDialect))
   }
 
@@ -437,12 +436,6 @@ object Dedup {
        | ORDER BY vec_a, vec_b""".stripMargin
   }
 
-  private def register(spark: SparkSession, dir: String): String = {
-    graft.core.Tables.load(spark, dir, "documents")
-      .createOrReplaceTempView("__graft_docs")
-    "__graft_docs"
-  }
-
   // Spark inlines CTEs, so a CTE referenced k times is COMPUTED k times
   // (the shingle pipeline appears 4x in the minhash plan, the simhash
   // signature pipeline 8x through the chunk union's self-join). DuckDB
@@ -452,84 +445,69 @@ object Dedup {
   // per (session, dir) and exposed as temp views — at 100 TB these are
   // exactly the relations you'd persist before a multi-consumer fan-out
   // (jaccard + minhash verification both consume them).
-  // value = view-name suffix per (session, dir), so a second data
-  // directory in the same session gets its own relations instead of
-  // silently overwriting (and then serving) the first one's
-  private def registerShingleRels(spark: SparkSession, dir: String): Int =
-    graft.core.SessionCache.getOrElseUpdate(spark, "dedup_rels", dir) {
-      {
-        val k = graft.core.SessionCache.counter(spark, "dedup_rels").getAndIncrement()
-        val docs = register(spark, dir)
-        // localCheckpoint truncates lineage: the view becomes the
-        // materialized partitions themselves, so downstream plans can
-        // never silently recompute the pipeline (persist+view relies on
-        // cache plan-matching, which misses here). On a real cluster the
-        // equivalent is reliable checkpoint / write-to-storage.
-        def mat(name: String, sql: String): Unit =
-          spark.sql(sql).localCheckpoint(eager = true).createOrReplaceTempView(name)
-        // band geometry elected ONCE from the corpus count, frozen
-        // alongside the signature relation it sized — every band
-        // consumer reads the SAME rungs. Count on a RAW load, not the
-        // rebalanced docs view: the raw scan's count collapses to the
-        // parquet footer stats, where counting through the rebalance
-        // would shuffle the full document text just to count rows
-        val geom = bandGeometryFor(
-          graft.core.Tables.load(spark, dir, "documents",
-            parallelize = false).count())
-        graft.core.SessionCache.getOrElseUpdate(spark, "dedup_band_geom", k)(geom)
-        // sh first: the row-local shingle projection runs ONCE; the
-        // hot-shingle filter then reads the persisted sh twice cheaply.
-        mat(s"__graft_sh_$k", shinglesSparkSql(docs))
-        mat(s"__graft_shf_$k",
-          s"""SELECT s.id, s.shingle FROM __graft_sh_$k s
-             |JOIN (SELECT shingle FROM __graft_sh_$k
-             |       GROUP BY shingle HAVING COUNT(*) <= 50) ok
-             |  ON s.shingle = ok.shingle""".stripMargin)
-        mat(s"__graft_sizes_$k",
-          s"SELECT id, COUNT(*) AS sz FROM __graft_shf_$k GROUP BY id")
-        mat(s"__graft_minhash_sigs_$k",
-          minhashSigsSql(s"__graft_shf_$k", geom._1 * geom._2))
-        k
-      }
-    }
+  private final case class ShingleRels(shf: String, sizes: String, sigs: String,
+                                       geom: (Int, Int))
 
-  /** The band geometry frozen with generation `k`'s signature relation. */
-  private def bandGeomOf(spark: SparkSession, k: Int): (Int, Int) =
-    graft.core.SessionCache.getOrElseUpdate(spark, "dedup_band_geom", k)((3, 4))
+  private def shingleRels(spark: SparkSession, dir: String): ShingleRels = {
+    import graft.core.Materialize.{view, Checkpoint}
+    // localCheckpoint truncates lineage: the view becomes the
+    // materialized partitions themselves, so downstream plans can never
+    // silently recompute the pipeline (persist+view relies on cache
+    // plan-matching, which misses here). On a real cluster the
+    // equivalent is reliable checkpoint / write-to-storage.
+    def mat(ns: String)(sql: => String): String =
+      view(spark, ns, dir, Checkpoint)(spark.sql(sql))
+    // band geometry elected ONCE from the corpus count, frozen alongside
+    // the signature relation it sized — every band consumer reads the
+    // SAME rungs. Count on a RAW load, not the rebalanced docs view: the
+    // raw scan's count collapses to the parquet footer stats, where
+    // counting through the rebalance would shuffle the full document
+    // text just to count rows
+    val geom = graft.core.SessionCache.getOrElseUpdate(spark, "dedup_band_geom", dir)(
+      bandGeometryFor(graft.core.Tables.load(spark, dir, "documents",
+        parallelize = false).count()))
+    // sh first: the row-local shingle projection runs ONCE; the
+    // hot-shingle filter then reads the persisted sh twice cheaply.
+    val sh = mat("dedup_sh")(shinglesSparkSql(graft.core.Tables.view(spark, dir, "documents")))
+    val shf = mat("dedup_shf") {
+      s"""SELECT s.id, s.shingle FROM $sh s
+         |JOIN (SELECT shingle FROM $sh
+         |       GROUP BY shingle HAVING COUNT(*) <= 50) ok
+         |  ON s.shingle = ok.shingle""".stripMargin
+    }
+    val sizes = mat("dedup_sizes")(s"SELECT id, COUNT(*) AS sz FROM $shf GROUP BY id")
+    ShingleRels(shf, sizes, mat("dedup_minhash_sigs")(minhashSigsSql(shf, geom._1 * geom._2)),
+      geom)
+  }
 
   // The full pairwise intersection is the quadratic relation; only plain
   // Jaccard pays for it, and only on first use (minhash never touches it).
-  private def registerInterRel(spark: SparkSession, k: Int): Unit =
-    graft.core.SessionCache.getOrElseUpdate(spark, "dedup_inter", k) {
+  private def interView(spark: SparkSession, dir: String): String =
+    graft.core.Materialize.view(spark, "dedup_inter", dir, graft.core.Materialize.Checkpoint) {
+      val shf = shingleRels(spark, dir).shf
       spark.sql(
         s"""SELECT a.id AS doc_a, b.id AS doc_b, COUNT(*) AS ict
-           |  FROM __graft_shf_$k a JOIN __graft_shf_$k b
+           |  FROM $shf a JOIN $shf b
            |    ON a.shingle = b.shingle AND a.id < b.id
            | GROUP BY a.id, b.id""".stripMargin)
-        .localCheckpoint(eager = true)
-        .createOrReplaceTempView(s"__graft_inter_$k")
-      true
     }
 
   def runExact(spark: SparkSession, dir: String): DataFrame = {
     // cheap hash-groupBy: partial aggregation on the raw scan beats
     // paying the rebalance exchange the shingle pipelines need
-    graft.core.Tables.load(spark, dir, "documents", parallelize = false)
-      .createOrReplaceTempView("__graft_docs_exact")
-    spark.sql(exactSql("__graft_docs_exact")(SparkDialect))
+    val documents = graft.core.Tables.view(spark, dir, "documents", parallelize = false)
+    spark.sql(exactSql(documents)(SparkDialect))
   }
   def runJaccard(spark: SparkSession, dir: String): DataFrame = {
-    val k = registerShingleRels(spark, dir)
-    registerInterRel(spark, k)
-    spark.sql(jaccardBody(s"__graft_inter_$k", s"__graft_sizes_$k", 0.5))
+    val rels = shingleRels(spark, dir)
+    spark.sql(jaccardBody(interView(spark, dir), rels.sizes, 0.5))
   }
   def runMinhash(spark: SparkSession, dir: String): DataFrame = {
     // read the LANDED skew-dispatched verify relation (shared with the
     // sweep/lookup consumers) instead of re-deriving the band join +
     // intersection inline — same rows, one less derivation per read
-    val k = registerShingleRels(spark, dir)
-    registerCandInterRel(spark, k)
-    spark.sql(jaccardBody(s"__graft_cinter_$k", s"__graft_sizes_$k", 0.5))
+    val rels = shingleRels(spark, dir)
+    spark.sql(jaccardBody(candInterView(spark, dir), rels.sizes, 0.5))
   }
 
   /** MinHash estimation calibration — per band-candidate pair, the
@@ -572,11 +550,10 @@ object Dedup {
        |${minhashCalibrationBody("sigs", "cinter", "sizes")}""".stripMargin
 
   def runMinhashCalibration(spark: SparkSession, dir: String): DataFrame = {
-    val k = registerShingleRels(spark, dir)
-    registerCandInterRel(spark, k)
-    val (r, b) = bandGeomOf(spark, k)
+    val rels = shingleRels(spark, dir)
+    val (r, b) = rels.geom
     spark.sql(minhashCalibrationBody(
-      s"__graft_minhash_sigs_$k", s"__graft_cinter_$k", s"__graft_sizes_$k",
+      rels.sigs, candInterView(spark, dir), rels.sizes,
       nHashes = r * b))
   }
 
@@ -637,9 +614,8 @@ object Dedup {
        |${thresholdSweepTail("cinter", "sizes")}""".stripMargin
 
   def runThresholdSweep(spark: SparkSession, dir: String): DataFrame = {
-    val k = registerShingleRels(spark, dir)
-    registerCandInterRel(spark, k)
-    spark.sql(s"WITH ${thresholdSweepTail(s"__graft_cinter_$k", s"__graft_sizes_$k")}")
+    val rels = shingleRels(spark, dir)
+    spark.sql(s"WITH ${thresholdSweepTail(candInterView(spark, dir), rels.sizes)}")
   }
 
   /** Near-dup pair drill-down — the reference's lookup-query pattern
@@ -683,10 +659,9 @@ object Dedup {
        |${pairLookupTail("cinter", "sizes", table, limit)}""".stripMargin
 
   def runPairLookup(spark: SparkSession, dir: String): DataFrame = {
-    val k = registerShingleRels(spark, dir)
-    registerCandInterRel(spark, k)
-    val docs = register(spark, dir)
-    spark.sql(s"WITH ${pairLookupTail(s"__graft_cinter_$k", s"__graft_sizes_$k", docs, 20)}")
+    val rels = shingleRels(spark, dir)
+    val docs = graft.core.Tables.view(spark, dir, "documents")
+    spark.sql(s"WITH ${pairLookupTail(candInterView(spark, dir), rels.sizes, docs, 20)}")
   }
 
   /** The candidate-verify intersection as a skew-dispatched DataFrame —
@@ -724,18 +699,14 @@ object Dedup {
     * candidate pairs land first (checkpointed), the advisor reads their
     * key histogram, and the verify join dispatches through
     * [[candInterFrame]]. */
-  private def registerCandInterRel(spark: SparkSession, k: Int): Unit =
-    graft.core.SessionCache.getOrElseUpdate(spark, "dedup_cinter", k) {
+  private def candInterView(spark: SparkSession, dir: String): String =
+    graft.core.Materialize.view(spark, "dedup_cinter", dir, graft.core.Materialize.Checkpoint) {
+      val rels = shingleRels(spark, dir)
       val cands = spark.sql(
-        s"""WITH ${minhashCandsCtes(s"__graft_minhash_sigs_$k",
-                                    bandGeomOf(spark, k))}
+        s"""WITH ${minhashCandsCtes(rels.sigs, rels.geom)}
            |SELECT * FROM cands""".stripMargin)
         .localCheckpoint(eager = true)
-      cands.createOrReplaceTempView(s"__graft_cands_$k")
-      candInterFrame(spark, cands, spark.table(s"__graft_shf_$k"))
-        .localCheckpoint(eager = true)
-        .createOrReplaceTempView(s"__graft_cinter_$k")
-      true
+      candInterFrame(spark, cands, spark.table(rels.shf))
     }
   /** The simhash signature relation, memoized per (session, dir) — the
     * same landed-index discipline as [[winnowFpsView]]: the native
@@ -745,18 +716,13 @@ object Dedup {
     * checkpoint serves every later bucket-join pass. IS NOT NULL
     * mirrors the SQL form's absent row for wordless docs. */
   private def simhashSigsView(spark: SparkSession, dir: String): String =
-    graft.core.SessionCache.getOrElseUpdate(spark, "simhashsigs", dir) {
-      val docs = register(spark, dir)
+    graft.core.Materialize.view(spark, "simhash_sigs", dir, graft.core.Materialize.Checkpoint) {
+      val docs = graft.core.Tables.view(spark, dir, "documents")
       graft.functions.SimHashExpr.register(spark)
-      val v = "__graft_simhash_sigs_" +
-        java.lang.Integer.toHexString(dir.hashCode)
       spark.sql(
         s"""SELECT id, v FROM (
            |  SELECT doc_id AS id, graft_simhash(text) AS v FROM $docs) s
            | WHERE v IS NOT NULL""".stripMargin)
-        .localCheckpoint(eager = true)
-        .createOrReplaceTempView(v)
-      v
     }
 
   def runSimhash(spark: SparkSession, dir: String): DataFrame =
@@ -769,9 +735,7 @@ object Dedup {
     }
 
   def runEmbedding(spark: SparkSession, dir: String): DataFrame = {
-    graft.core.Tables.load(spark, dir, "embeddings")
-      .createOrReplaceTempView("__graft_emb_dedup")
-    spark.sql(embeddingSql("__graft_emb_dedup",
+    spark.sql(embeddingSql(graft.core.Tables.view(spark, dir, "embeddings"),
       nOverride = Some(embCount(spark, dir)))(SparkDialect))
   }
 
@@ -835,9 +799,7 @@ object Dedup {
   }
 
   def runEmbeddingLsh(spark: SparkSession, dir: String): DataFrame = {
-    graft.core.Tables.load(spark, dir, "embeddings")
-      .createOrReplaceTempView("__graft_emb_lsh")
-    spark.sql(embeddingLshSql("__graft_emb_lsh",
+    spark.sql(embeddingLshSql(graft.core.Tables.view(spark, dir, "embeddings"),
       nOverride = Some(embCount(spark, dir)))(SparkDialect))
   }
 
@@ -934,13 +896,8 @@ object Dedup {
        | ORDER BY max_hamming""".stripMargin
 
   def runSimhashSweep(spark: SparkSession, dir: String): DataFrame = {
-    val pv = graft.core.SessionCache.getOrElseUpdate(spark, "simhashpairs", dir) {
-      val name =
-        s"__graft_simhash_pairs_${java.lang.Integer.toHexString(dir.hashCode)}"
-      runSimhash(spark, dir).localCheckpoint(eager = true)
-        .createOrReplaceTempView(name)
-      name
-    }
+    val pv = graft.core.Materialize.view(spark, "simhash_pairs", dir,
+      graft.core.Materialize.Checkpoint)(runSimhash(spark, dir))
     spark.sql(s"WITH ${simhashSweepTail(pv)}")
   }
 
@@ -949,10 +906,8 @@ object Dedup {
        |${simhashSweepTail("pairs")}""".stripMargin
 
   def runEmbeddingSweep(spark: SparkSession, dir: String): DataFrame = {
-    val pv = graft.core.SessionCache.getOrElseUpdate(spark, "embpairs", dir) {
-      graft.core.Tables.load(spark, dir, "embeddings")
-        .createOrReplaceTempView("__graft_emb_lsh")
-      val name = s"__graft_emb_pairs_${java.lang.Integer.toHexString(dir.hashCode)}"
+    val pv = graft.core.Materialize.view(spark, "emb_pairs", dir,
+        graft.core.Materialize.Checkpoint) {
       // the UNFILTERED bucket-blocked pair relation (threshold 0 keeps
       // every candidate the bucket gate admits) — landed once
       spark.sql(
@@ -962,14 +917,12 @@ object Dedup {
            |             ${Similarity.adaptiveModFor(embCount(spark, dir), occ = 8)}) AS bucket,
            |         embedding,
            |         SQRT(${SparkDialect.dotProduct("embedding", "embedding")}) AS nrm
-           |    FROM __graft_emb_lsh
+           |    FROM ${graft.core.Tables.view(spark, dir, "embeddings")}
            |)
            |SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
            |       ${SparkDialect.dotProduct("a.embedding", "b.embedding")} / NULLIF(a.nrm * b.nrm, 0) AS cos
            |  FROM emb a JOIN emb b
            |    ON a.bucket = b.bucket AND a.vec_id < b.vec_id""".stripMargin)
-        .localCheckpoint(eager = true).createOrReplaceTempView(name)
-      name
     }
     spark.sql(s"WITH ${embeddingSweepTail(pv)}")
   }
@@ -1055,10 +1008,8 @@ object Dedup {
 
   def runEmbeddingStack(spark: SparkSession, dir: String): DataFrame = {
     val n = embCount(spark, dir)
-    val pv = graft.core.SessionCache.getOrElseUpdate(spark, "embstack", dir) {
-      graft.core.Tables.load(spark, dir, "embeddings")
-        .createOrReplaceTempView("__graft_emb_stack_src")
-      val name = s"__graft_emb_stack_${java.lang.Integer.toHexString(dir.hashCode)}"
+    val pv = graft.core.Materialize.view(spark, "emb_stack", dir,
+        graft.core.Materialize.Checkpoint) {
       // one landed (vec_id, b63, nrm, embedding) relation: Spark
       // inlines CTEs, so without it the 3 union branches would re-scan
       // and re-hash the corpus 6 times
@@ -1068,9 +1019,7 @@ object Dedup {
                       StackTables * StackPlanesPerTable)(SparkDialect)} AS b63,
            |       embedding,
            |       SQRT(${SparkDialect.dotProduct("embedding", "embedding")}) AS nrm
-           |  FROM __graft_emb_stack_src""".stripMargin)
-        .localCheckpoint(eager = true).createOrReplaceTempView(name)
-      name
+           |  FROM ${graft.core.Tables.view(spark, dir, "embeddings")}""".stripMargin)
     }
     val bmod = Similarity.adaptiveModForWarn(n, occ = 8, minP = 8,
       maxP = StackPlanesPerTable, what = "dedup_embedding_stack")
@@ -1086,10 +1035,8 @@ object Dedup {
     * space under the join). Landed once per (session, dir). */
   def embeddingIndex(spark: SparkSession, dir: String): (DataFrame, Int) = {
     val bmod = Similarity.adaptiveModFor(embCount(spark, dir), occ = 8)
-    val name = graft.core.SessionCache.getOrElseUpdate(spark, "embindex", dir) {
-      graft.core.Tables.load(spark, dir, "embeddings")
-        .createOrReplaceTempView("__graft_emb_index_src")
-      val v = s"__graft_emb_index_${java.lang.Integer.toHexString(dir.hashCode)}"
+    val name = graft.core.Materialize.view(spark, "emb_index", dir,
+        graft.core.Materialize.Checkpoint) {
       spark.sql(
         s"""SELECT vec_id,
            |       MOD(${Similarity.bucketExpr("embedding",
@@ -1097,9 +1044,7 @@ object Dedup {
            |           $bmod) AS bucket,
            |       embedding,
            |       SQRT(${SparkDialect.dotProduct("embedding", "embedding")}) AS nrm
-           |  FROM __graft_emb_index_src""".stripMargin)
-        .localCheckpoint(eager = true).createOrReplaceTempView(v)
-      v
+           |  FROM ${graft.core.Tables.view(spark, dir, "embeddings")}""".stripMargin)
     }
     (spark.table(name), bmod)
   }
@@ -1231,19 +1176,15 @@ object Dedup {
   }
 
   def runDecontaminateStack(spark: SparkSession, dir: String): DataFrame = {
-    graft.core.Tables.load(spark, dir, "embeddings")
-      .createOrReplaceTempView("__graft_emb_decon_stack")
-    spark.sql(decontaminateStackSql("__graft_emb_decon_stack",
+    spark.sql(decontaminateStackSql(graft.core.Tables.view(spark, dir, "embeddings"),
       nOverride = Some(embCount(spark, dir)))(SparkDialect))
   }
 
   def runDecontaminateSemantic(spark: SparkSession, dir: String): DataFrame = {
-    graft.core.Tables.load(spark, dir, "embeddings")
-      .createOrReplaceTempView("__graft_emb_decon")
     val n = embCount(spark, dir)
     Similarity.adaptiveModForWarn(n, occ = 32, minP = 4,
       maxP = DecontamPlanesPerTable, what = "decontaminate_semantic")
-    spark.sql(decontaminateSemanticSql("__graft_emb_decon",
+    spark.sql(decontaminateSemanticSql(graft.core.Tables.view(spark, dir, "embeddings"),
       nOverride = Some(n))(SparkDialect))
   }
 
@@ -1394,17 +1335,12 @@ object Dedup {
     * themselves. WinnowExprSpec asserts row-set identity with the SQL
     * form ([[winnowFpsSql]]), which remains the DuckDB oracle rendering. */
   def winnowFpsView(spark: SparkSession, dir: String): String =
-    graft.core.SessionCache.getOrElseUpdate(spark, "winnowfps", dir) {
-      val docs = register(spark, dir)
+    graft.core.Materialize.view(spark, "winnow_fps", dir, graft.core.Materialize.Checkpoint) {
+      val docs = graft.core.Tables.view(spark, dir, "documents")
       graft.functions.WinnowFpsExpr.register(spark)
-      val v = "__graft_winnow_fps_" +
-        java.lang.Integer.toHexString(dir.hashCode)
       spark.sql(
         s"""SELECT doc_id AS id, fp FROM $docs
            | LATERAL VIEW explode(graft_winnow_fps(text)) e AS fp""".stripMargin)
-        .localCheckpoint(eager = true)
-        .createOrReplaceTempView(v)
-      v
     }
 
   def runWinnow(spark: SparkSession, dir: String): DataFrame =
@@ -1522,15 +1458,11 @@ object Dedup {
     * drill-down) reads the landed rows instead of re-running the
     * fingerprint join per consumer. */
   private[pipeline] def decontHitsView(spark: SparkSession, dir: String): String =
-    graft.core.SessionCache.getOrElseUpdate(spark, "deconthits", dir) {
-      val v = "__graft_decont_hits_" +
-        java.lang.Integer.toHexString(dir.hashCode)
+    graft.core.Materialize.view(spark, "decont_hits", dir, graft.core.Materialize.Checkpoint) {
       spark.sql(
         s"""WITH ${decontSparkCtes(winnowFpsView(spark, dir), 3, 50)}
            |SELECT corpus_id, eval_id, CAST(shared AS BIGINT) AS shared
            |  FROM hits""".stripMargin)
-        .localCheckpoint(eager = true).createOrReplaceTempView(v)
-      v
     }
 
   /** Batch fingerprint NOVELTY — the freshness complement of
@@ -1606,11 +1538,9 @@ object Dedup {
     * over the chunk substrings (no char-position explode), checkpointed
     * once; the SQL chain above stays the oracle rendering. */
   private def chunkFpsView(spark: SparkSession, dir: String): String =
-    graft.core.SessionCache.getOrElseUpdate(spark, "chunkfps", dir) {
-      val docs = register(spark, dir)
+    graft.core.Materialize.view(spark, "chunk_fps", dir, graft.core.Materialize.Checkpoint) {
+      val docs = graft.core.Tables.view(spark, dir, "documents")
       graft.functions.WinnowFpsExpr.register(spark)
-      val v = "__graft_chunk_fps_" +
-        java.lang.Integer.toHexString(dir.hashCode)
       spark.sql(
         s"""WITH docs AS (
            |  SELECT doc_id AS id, text FROM $docs
@@ -1618,9 +1548,6 @@ object Dedup {
            |${Chunker.textCteSql()(SparkDialect)}
            |SELECT doc_id AS id, fp FROM ctext
            | LATERAL VIEW explode(graft_winnow_fps(text)) e AS fp""".stripMargin)
-        .localCheckpoint(eager = true)
-        .createOrReplaceTempView(v)
-      v
     }
 
   def runFuzzyChunks(spark: SparkSession, dir: String): DataFrame =
@@ -1741,16 +1668,11 @@ object Dedup {
 
   def runIncremental(spark: SparkSession, dir: String): DataFrame = {
     val fpsRel = winnowFpsView(spark, dir)
-    val docsRel = register(spark, dir)
+    val docsRel = graft.core.Tables.view(spark, dir, "documents")
     // the near-hit relation lands once per (session, dir) through the
     // skew-dispatched frame; the presentation tail reads the landed view
-    val hitsView = graft.core.SessionCache.getOrElseUpdate(
-      spark, "incrhits", dir) {
-      val v = s"__graft_incr_hits_${dir.hashCode.toHexString}"
-      incrementalHitsFrame(spark, fpsRel)
-        .localCheckpoint(eager = true).createOrReplaceTempView(v)
-      v
-    }
+    val hitsView = graft.core.Materialize.view(spark, "incr_hits", dir,
+      graft.core.Materialize.Checkpoint)(incrementalHitsFrame(spark, fpsRel))
     spark.sql(incrementalBodySql(fpsRel, docsRel, hitsRel = Some(hitsView)))
   }
 
@@ -1882,7 +1804,7 @@ object Dedup {
        |${survivorAuditTail("comp", table)(d)}""".stripMargin
 
   def runSurvivorAudit(spark: SparkSession, dir: String): DataFrame = {
-    val t = register(spark, dir)
+    val t = graft.core.Tables.view(spark, dir, "documents")
     val comp = clusterCompView(spark, dir)
     spark.sql(
       s"""WITH ${survivorAuditTail(comp, t)(SparkDialect)}""".stripMargin)
@@ -1906,20 +1828,16 @@ object Dedup {
     * discipline applied to the one entry (source matrix) that still
     * re-derived the exact-pair MD5 scans per run. */
   private[graft] def dupPairsView(spark: SparkSession, dir: String): String =
-    graft.core.SessionCache.getOrElseUpdate(spark, "duppairs", dir) {
-      val k = registerShingleRels(spark, dir)
-      val docs = register(spark, dir)
-      val v = s"__graft_dup_pairs_$k"
+    graft.core.Materialize.view(spark, "dup_pairs", dir, graft.core.Materialize.Checkpoint) {
+      val rels = shingleRels(spark, dir)
+      val docs = graft.core.Tables.view(spark, dir, "documents")
       spark.sql(
-        s"""WITH ${clusterEdgeCtes(docs, s"__graft_minhash_sigs_$k",
-                                   s"__graft_shf_$k", s"__graft_sizes_$k", 0.5,
-                                   bandGeomOf(spark, k))}
+        s"""WITH ${clusterEdgeCtes(docs, rels.sigs,
+                                   rels.shf, rels.sizes, 0.5,
+                                   rels.geom)}
            |SELECT doc_a, doc_b, 0 AS is_exact FROM mh
            |UNION ALL
            |SELECT doc_a, doc_b, 1 AS is_exact FROM epairs""".stripMargin)
-        .localCheckpoint(eager = true)
-        .createOrReplaceTempView(v)
-      v
     }
 
   private[graft] def clusterEdges(spark: SparkSession, dir: String): DataFrame = {
@@ -1938,7 +1856,7 @@ object Dedup {
     * the propagation loop runs once; the cluster entry and the quality
     * gate both read the landed labels. */
   private[graft] def clusterCompView(spark: SparkSession, dir: String): String =
-    graft.core.SessionCache.getOrElseUpdate(spark, "dedupcc", dir) {
+    graft.core.Materialize.view(spark, "cc_comp", dir) {
       import org.apache.spark.sql.functions.{coalesce, col, least, min, sum}
       val edges = clusterEdges(spark, dir).localCheckpoint(eager = true)
       // symmetric edges ⇒ the node set is exactly the distinct srcs
@@ -1963,9 +1881,7 @@ object Dedup {
           rounds += 1
         }
       }
-      val v = "__graft_cc_comp_" + java.lang.Integer.toHexString(dir.hashCode)
-      labels.createOrReplaceTempView(v)
-      v
+      labels  // already checkpointed: the last round's relation
     }
 
   def runClusters(spark: SparkSession, dir: String): DataFrame =
@@ -2013,7 +1929,7 @@ object Dedup {
 
   def runSourceMatrix(spark: SparkSession, dir: String): DataFrame = {
     val pv = dupPairsView(spark, dir)
-    val docs = register(spark, dir)
+    val docs = graft.core.Tables.view(spark, dir, "documents")
     spark.sql(
       s"""WITH mh AS (SELECT doc_a, doc_b FROM $pv WHERE is_exact = 0),
          |epairs AS (SELECT doc_a, doc_b FROM $pv WHERE is_exact = 1),
@@ -2049,9 +1965,8 @@ object Dedup {
        |${containmentBody("inter", "sizes", threshold)}""".stripMargin
 
   def runContainment(spark: SparkSession, dir: String): DataFrame = {
-    val k = registerShingleRels(spark, dir)
-    registerInterRel(spark, k)
-    spark.sql(containmentBody(s"__graft_inter_$k", s"__graft_sizes_$k"))
+    val rels = shingleRels(spark, dir)
+    spark.sql(containmentBody(interView(spark, dir), rels.sizes))
   }
 
   /** LSH blocking-quality measurement — the dedup analogue of the ANN
@@ -2105,9 +2020,8 @@ object Dedup {
        |${lshRecallBody("inter", "sizes", "sigs", threshold, geom)(d).stripPrefix("WITH ")}""".stripMargin
 
   def runLshRecall(spark: SparkSession, dir: String): DataFrame = {
-    val k = registerShingleRels(spark, dir)
-    registerInterRel(spark, k)
-    spark.sql(lshRecallBody(s"__graft_inter_$k", s"__graft_sizes_$k",
-      s"__graft_minhash_sigs_$k", 0.5, bandGeomOf(spark, k))(SparkDialect))
+    val rels = shingleRels(spark, dir)
+    spark.sql(lshRecallBody(interView(spark, dir), rels.sizes,
+      rels.sigs, 0.5, rels.geom)(SparkDialect))
   }
 }

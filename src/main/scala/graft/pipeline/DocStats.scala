@@ -133,9 +133,7 @@ object DocStats {
   }
 
   private def register(spark: SparkSession, dir: String): String = {
-    graft.core.Tables.load(spark, dir, "documents")
-      .createOrReplaceTempView("__graft_docstats")
-    "__graft_docstats"
+    graft.core.Tables.view(spark, dir, "documents")
   }
 
   def runOutliers(spark: SparkSession, dir: String): DataFrame =

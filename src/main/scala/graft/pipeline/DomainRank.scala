@@ -228,23 +228,20 @@ object DomainRank {
   }
 
   private[graft] def landedGraph(spark: SparkSession,
-                                 dir: String): (String, String, Long) =
-    graft.core.SessionCache.getOrElseUpdate(spark, "domainrank", dir) {
-      val docs = graft.core.Tables.load(spark, dir, "documents")
-      docs.createOrReplaceTempView("__graft_dr_docs")
-      val nSrc = docs.select("source").distinct.count()
-      val sfx = java.lang.Integer.toHexString(dir.hashCode)
-      val nv = s"__graft_dr_nodes_$sfx"
-      val ev = s"__graft_dr_edges_$sfx"
-      val nodes = spark.sql(
-        s"""WITH ${graphCtes("__graft_dr_docs", nSrc.toString)(SparkDialect)}
+                                 dir: String): (String, String, Long) = {
+    import graft.core.Materialize.{view, Checkpoint}
+    val docs = graft.core.Tables.view(spark, dir, "documents")
+    lazy val nSrc = spark.table(docs).select("source").distinct.count()
+    val nv = view(spark, "dr_nodes", dir, Checkpoint) {
+      spark.sql(
+        s"""WITH ${graphCtes(docs, nSrc.toString)(SparkDialect)}
            |SELECT site, n_docs FROM nodes""".stripMargin)
-        .localCheckpoint()
-      nodes.createOrReplaceTempView(nv)
-      spark.sql(edgesSql("__graft_dr_docs", Some(nSrc))(SparkDialect))
-        .localCheckpoint().createOrReplaceTempView(ev)
-      (nv, ev, nodes.count())
     }
+    val ev = view(spark, "dr_edges", dir, Checkpoint)(
+      spark.sql(edgesSql(docs, Some(nSrc))(SparkDialect)))
+    (nv, ev, graft.core.SessionCache.getOrElseUpdate(spark, "dr_node_count", dir)(
+      spark.table(nv).count()))
+  }
 
   def duckSql(): String = domainRankSql("documents")(DuckDialect)
 
@@ -334,38 +331,33 @@ object DomainRank {
     * consumer read the same frozen rank relation the report entry
     * computed — rank never recomputes per consumer. */
   private[graft] def landedRanks(spark: SparkSession,
-                                 dir: String): (String, String, String) =
-    graft.core.SessionCache.getOrElseUpdate(spark, "domainrank_final", dir) {
-      val (nv, ev, nNodes) = landedGraph(spark, dir)
-      val hint = if (nNodes <= RankBroadcastBound) "BROADCAST" else "SHUFFLE_HASH"
-      val sfx = java.lang.Integer.toHexString(dir.hashCode)
-      var prev = s"__graft_dr_f0_$sfx"
-      var prevDf: Option[DataFrame] = None
-      spark.sql(s"SELECT site, CAST($MicroBase AS BIGINT) AS rank_u FROM $nv")
-        .createOrReplaceTempView(prev)
-      for (i <- 1 to Iters) {
-        val next = s"__graft_dr_f${i}_$sfx"
-        val nextDf = spark.sql(iterSql(nv, ev, prev, hint)(SparkDialect))
-          .localCheckpoint()
-        nextDf.createOrReplaceTempView(next)
-        prevDf.foreach(_.unpersist())  // the loop reads only r_{i-1}
-        prevDf = Some(nextDf)
-        prev = next
+                                 dir: String): (String, String, String) = {
+    val (nv, ev, nNodes) = landedGraph(spark, dir)
+    val hint = if (nNodes <= RankBroadcastBound) "BROADCAST" else "SHUFFLE_HASH"
+    val rv = graft.core.Materialize.view(spark, "dr_ranks", dir) {
+      var layer = spark.sql(s"SELECT site, CAST($MicroBase AS BIGINT) AS rank_u FROM $nv")
+      var landed: Option[DataFrame] = None
+      for (_ <- 1 to Iters) {
+        val nextDf = graft.core.Materialize.sql(spark, layer) { case Seq(prev) =>
+          iterSql(nv, ev, prev, hint)(SparkDialect)
+        }.localCheckpoint()
+        landed.foreach(_.unpersist())  // the loop reads only r_{i-1}
+        landed = Some(nextDf)
+        layer = nextDf
       }
-      (nv, prev, hint)
+      layer
     }
+    (nv, rv, hint)
+  }
 
   def runRankBudget(spark: SparkSession, dir: String): DataFrame = {
     val (nv, rv, hint) = landedRanks(spark, dir)
-    graft.core.Tables.load(spark, dir, "documents")
-      .createOrReplaceTempView("__graft_drb_docs")
-    val sfx = java.lang.Integer.toHexString(dir.hashCode)
-    val dsv = s"__graft_drb_docsite_$sfx"
-    spark.sql(
+    val docSite = spark.sql(
       s"""SELECT doc_id, ${siteExpr("doc_id", "source")(SparkDialect)} AS site
-         |  FROM __graft_drb_docs""".stripMargin)
-      .createOrReplaceTempView(dsv)
-    spark.sql(s"WITH ${budgetTail(dsv, nv, rv, hint)(SparkDialect)}")
+         |  FROM ${graft.core.Tables.view(spark, dir, "documents")}""".stripMargin)
+    graft.core.Materialize.sql(spark, docSite) { case Seq(dsv) =>
+      s"WITH ${budgetTail(dsv, nv, rv, hint)(SparkDialect)}"
+    }
   }
 
   def duckRankBudgetSql(): String = rankBudgetSql("documents")(DuckDialect)

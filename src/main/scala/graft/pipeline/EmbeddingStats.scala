@@ -87,15 +87,10 @@ object EmbeddingStats {
        |${bodySql("comp")(d).stripPrefix("WITH ")}""".stripMargin
 
   def run(spark: SparkSession, dir: String): DataFrame = {
-    val comp = graft.core.SessionCache.getOrElseUpdate(spark, "embcomp", dir) {
-      graft.core.Tables.load(spark, dir, "embeddings", parallelize = false)
-        .createOrReplaceTempView("__graft_emb_stats")
-      val v = "__graft_emb_comp_" +
-        java.lang.Integer.toHexString(dir.hashCode)
-      spark.sql(compSql("__graft_emb_stats")(SparkDialect))
-        .localCheckpoint(eager = true)
-        .createOrReplaceTempView(v)
-      v
+    val comp = graft.core.Materialize.view(spark, "emb_comp", dir,
+        graft.core.Materialize.Checkpoint) {
+      spark.sql(compSql(graft.core.Tables.view(spark, dir, "embeddings", parallelize = false))(
+        SparkDialect))
     }
     spark.sql(bodySql(comp)(SparkDialect))
   }

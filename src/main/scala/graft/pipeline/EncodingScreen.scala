@@ -74,9 +74,7 @@ object EncodingScreen {
        | ORDER BY doc_id""".stripMargin
 
   def run(spark: SparkSession, dir: String): DataFrame = {
-    graft.core.Tables.load(spark, dir, "documents")
-      .createOrReplaceTempView("__graft_enc_docs")
-    spark.sql(sql("__graft_enc_docs")(SparkDialect))
+    spark.sql(sql(graft.core.Tables.view(spark, dir, "documents"))(SparkDialect))
   }
 
   def duckSql(): String = sql("documents")(DuckDialect)

@@ -182,8 +182,7 @@ object EntityMatch {
   }
 
   def run(spark: SparkSession, dir: String): DataFrame = {
-    val cust = graft.core.Tables.load(spark, dir, "customer")
-    cust.createOrReplaceTempView("__graft_em_cust")
+    val cust = graft.core.Tables.view(spark, dir, "customer")
     // block width elected + block histogram measured ONCE per
     // (session, dir) — the FreqProfiler-shaped advisor pass that picks
     // the resolution and the dispatch (one column-pruned count + one
@@ -196,9 +195,9 @@ object EntityMatch {
         val k = blockDigitsFor(graft.core.Tables.load(
           spark, dir, "customer", parallelize = false).count())
         (k, graft.core.SkewJoin.hotKeys(
-          cleanDf(spark, "__graft_em_cust", k), "blk_key", HotShare))
+          cleanDf(spark, cust, k), "blk_key", HotShare))
       }
-    runGuarded(spark, "__graft_em_cust", hot, digits = digits)
+    runGuarded(spark, cust, hot, digits = digits)
   }
 
   def duckSql(): String = sql("customer")(DuckDialect)

@@ -65,7 +65,7 @@ object GraphCommunities {
     spark.sql(reportSql(compView(spark, dir)))
 
   private[graft] def compView(spark: SparkSession, dir: String): String =
-    graft.core.SessionCache.getOrElseUpdate(spark, "graphcomm", dir) {
+    graft.core.Materialize.view(spark, "graph_comm", dir) {
       import org.apache.spark.sql.functions.{coalesce, col, least, min}
       val (nv, ev, _) = DomainRank.landedGraph(spark, dir)
       val und = spark.sql(
@@ -99,9 +99,7 @@ object GraphCommunities {
         rounds += 1
       }
       und.unpersist()
-      val v = "__graft_gc_comp_" + java.lang.Integer.toHexString(dir.hashCode)
-      labels.createOrReplaceTempView(v)
-      v
+      labels  // already checkpointed: the last round's relation
     }
 
   def duckSql(): String = communitiesSql("documents")(DuckDialect)

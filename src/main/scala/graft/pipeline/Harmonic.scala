@@ -122,12 +122,8 @@ object Harmonic {
     * same chain as one unrolled statement, spec-pinned identical. */
   def runHarmonic(spark: SparkSession, dir: String): DataFrame = {
     val (nv, ev) = landedPairs(spark, dir)
-    val sfx = graft.core.SessionCache.counter(spark, "harmonic_iter")
-      .incrementAndGet()
-    var prev = s"__graft_hc_b1_$sfx"
-    var prevDf: Option[DataFrame] = None
-    spark.sql(s"SELECT src, dst, 1 AS dist FROM $ev")
-      .createOrReplaceTempView(prev)
+    var layer = spark.sql(s"SELECT src, dst, 1 AS dist FROM $ev")
+    var landed: Option[DataFrame] = None
     // convergence early-exit: once a hop settles NO new pair (no row at
     // dist = h), every later hop's frontier join is empty and the
     // MIN-group returns the carried relation unchanged — b_h = b_MaxHops
@@ -137,37 +133,32 @@ object Harmonic {
     var h = 2
     var converged = false
     while (h <= MaxHops && !converged) {
-      val next = s"__graft_hc_b${h}_$sfx"
-      val nextDf = spark.sql(
+      val nextDf = graft.core.Materialize.sql(spark, layer) { case Seq(prev) =>
         s"""SELECT src, dst, MIN(dist) AS dist FROM (
            |  SELECT src, dst, dist FROM $prev
            |  UNION ALL
            |  SELECT p.src, e.dst, $h AS dist
            |    FROM $prev p JOIN $ev e ON e.src = p.dst
            |   WHERE p.dist = ${h - 1} AND p.src <> e.dst
-           |) u GROUP BY src, dst""".stripMargin)
-        .localCheckpoint()
-      nextDf.createOrReplaceTempView(next)
-      prevDf.foreach(_.unpersist())  // only the newest layer is read again
-      prevDf = Some(nextDf)
-      prev = next
+           |) u GROUP BY src, dst""".stripMargin
+      }.localCheckpoint()
+      landed.foreach(_.unpersist())  // only the newest layer is read again
+      landed = Some(nextDf)
+      layer = nextDf
       converged = nextDf.where(s"dist = $h").isEmpty
       h += 1
     }
-    spark.sql(s"WITH ${reportSql(nv, prev)(SparkDialect)}")
+    graft.core.Materialize.sql(spark, layer) { case Seq(ball) =>
+      s"WITH ${reportSql(nv, ball)(SparkDialect)}"
+    }
   }
 
   /** Landed distinct-edge view beside the session's graph. */
-  private[graft] def landedPairs(spark: SparkSession,
-                                 dir: String): (String, String) =
-    graft.core.SessionCache.getOrElseUpdate(spark, "harmonic_pairs", dir) {
-      val (nv, ev, _) = DomainRank.landedGraph(spark, dir)
-      val sfx = java.lang.Integer.toHexString(dir.hashCode)
-      val pv = s"__graft_hc_ep_$sfx"
-      spark.sql(s"SELECT DISTINCT src, dst FROM $ev")
-        .localCheckpoint().createOrReplaceTempView(pv)
-      (nv, pv)
-    }
+  private[graft] def landedPairs(spark: SparkSession, dir: String): (String, String) = {
+    val (nv, ev, _) = DomainRank.landedGraph(spark, dir)
+    (nv, graft.core.Materialize.view(spark, "hc_pairs", dir, graft.core.Materialize.Checkpoint)(
+      spark.sql(s"SELECT DISTINCT src, dst FROM $ev")))
+  }
 
   def duckSql(): String = harmonicSql("documents")(DuckDialect)
 
@@ -182,9 +173,6 @@ object Harmonic {
     * reach). */
   def hyperBall(spark: SparkSession, nodesRel: String, epRel: String,
                 lgK: Int = LgK, hint: String = "SHUFFLE_HASH"): DataFrame = {
-    val sfx = graft.core.SessionCache.counter(spark, "hyperball_iter")
-      .incrementAndGet()
-    var prev = s"__graft_hb_s0_$sfx"
     // each hop needs ONLY the previous state: unpersist the superseded
     // checkpoint once the next lands, or V·sketch bytes accumulate per
     // hop and the loop's memory bill is MaxHops× what the recurrence
@@ -195,10 +183,8 @@ object Harmonic {
          |       CAST(0 AS BIGINT) AS h_u
          |  FROM $nodesRel GROUP BY site""".stripMargin)
       .localCheckpoint()
-    prevDf.createOrReplaceTempView(prev)
     for (d <- 1 to MaxHops) {
-      val next = s"__graft_hb_s${d}_$sfx"
-      val nextDf = spark.sql(
+      val nextDf = graft.core.Materialize.sql(spark, prevDf) { case Seq(prev) =>
         s"""WITH nbr AS (
            |  SELECT /*+ $hint(p) */ e.dst AS site,
            |         hll_union_agg(p.sk) AS nsk
@@ -215,15 +201,14 @@ object Harmonic {
            |SELECT site, sk, hll_sketch_estimate(sk) AS est,
            |       h_u + (hll_sketch_estimate(sk) - est0) * $MicroBase DIV $d
            |         AS h_u
-           |  FROM m""".stripMargin)
-        .localCheckpoint()
-      nextDf.createOrReplaceTempView(next)
+           |  FROM m""".stripMargin
+      }.localCheckpoint()
       prevDf.unpersist()
       prevDf = nextDf
-      prev = next
     }
-    spark.sql(
+    graft.core.Materialize.sql(spark, prevDf) { case Seq(ball) =>
       s"""SELECT site, est AS ball_est, h_u AS harmonic_est_micro
-         |  FROM $prev ORDER BY harmonic_est_micro DESC, site""".stripMargin)
+         |  FROM $ball ORDER BY harmonic_est_micro DESC, site""".stripMargin
+    }
   }
 }

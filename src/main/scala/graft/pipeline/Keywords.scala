@@ -91,9 +91,7 @@ object Keywords {
        | ORDER BY doc_id, rank""".stripMargin
 
   def run(spark: SparkSession, dir: String): DataFrame = {
-    graft.core.Tables.load(spark, dir, "documents")
-      .createOrReplaceTempView("__graft_kw_docs")
-    spark.sql(sparkSql("__graft_kw_docs"))
+    spark.sql(sparkSql(graft.core.Tables.view(spark, dir, "documents")))
   }
 
   def duckSql(): String = sql("documents")(DuckDialect)

@@ -254,9 +254,7 @@ object Multimodal {
   }
 
   def run(spark: SparkSession, dir: String): DataFrame = {
-    graft.core.Tables.load(spark, dir, "documents")
-      .createOrReplaceTempView("__graft_media")
-    spark.sql(sql("__graft_media")(SparkDialect))
+    spark.sql(sql(graft.core.Tables.view(spark, dir, "documents"))(SparkDialect))
   }
 
   def duckSql(): String = sql("documents")(DuckDialect)
@@ -523,13 +521,14 @@ object Multimodal {
   }
 
   def runAudioDedup(spark: SparkSession, dir: String): DataFrame = {
-    val view = graft.core.SessionCache.getOrElseUpdate(spark, "ehash", dir) {
+    val view = graft.core.Materialize.view(spark, "ehash", dir,
+        graft.core.Materialize.Checkpoint) {
       import spark.implicits._
       import org.apache.spark.sql.functions.col
       val docs = graft.core.Tables.load(spark, dir, "documents")
         .select(col("doc_id"), col("text")).where(col("text").isNotNull)
         .as[(Long, String)]
-      val hashed = docs.mapPartitions { it =>
+      docs.mapPartitions { it =>
         val md = java.security.MessageDigest.getInstance("MD5")
         it.flatMap { case (id, text) =>
           val samples = Array.ofDim[Int](128)
@@ -551,12 +550,11 @@ object Multimodal {
               wavFrameEnergy(payload, 64).map(e => (vid, eHash(e)))
             }
         }
-      }.toDF("id", "ehash").localCheckpoint(eager = true)
-      val v = "__graft_ehash_" + java.lang.Integer.toHexString(dir.hashCode)
-      hashed.createOrReplaceTempView(v)
-      (v, hashed.count())
+      }.toDF("id", "ehash")
     }
-    spark.sql(hammingPairsSql(view._1, "ehash", view._2))
+    val n = graft.core.SessionCache.getOrElseUpdate(spark, "ehash_count", dir)(
+      spark.table(view).count())
+    spark.sql(hammingPairsSql(view, "ehash", n))
   }
 
   /** Arithmetic oracle for [[runAudioDedup]]: frame energies straight
@@ -723,13 +721,14 @@ object Multimodal {
     * a band equi-join (never all-pairs — PlanSpec), and verification
     * touches only banded candidates. */
   def runPhashDedup(spark: SparkSession, dir: String): DataFrame = {
-    val view = graft.core.SessionCache.getOrElseUpdate(spark, "phash", dir) {
+    val view = graft.core.Materialize.view(spark, "phash", dir,
+        graft.core.Materialize.Checkpoint) {
       import spark.implicits._
       import org.apache.spark.sql.functions.col
       val docs = graft.core.Tables.load(spark, dir, "documents")
         .select(col("doc_id"), col("text")).where(col("text").isNotNull)
         .as[(Long, String)]
-      val hashed = docs.mapPartitions { it =>
+      docs.mapPartitions { it =>
         val md = java.security.MessageDigest.getInstance("MD5")
         it.flatMap { case (id, text) =>
           val vals = Array.ofDim[Int](64)
@@ -749,12 +748,11 @@ object Multimodal {
               bmpGridLuma(payload, 8).map(g => (vid, aHash(g)))
             }
         }
-      }.toDF("id", "phash").localCheckpoint(eager = true)
-      val v = "__graft_phash_" + java.lang.Integer.toHexString(dir.hashCode)
-      hashed.createOrReplaceTempView(v)
-      (v, hashed.count())
+      }.toDF("id", "phash")
     }
-    spark.sql(hammingPairsSql(view._1, "phash", view._2))
+    val n = graft.core.SessionCache.getOrElseUpdate(spark, "phash_count", dir)(
+      spark.table(view).count())
+    spark.sql(hammingPairsSql(view, "phash", n))
   }
 
   /** The oracle rendering: every hash bit from the md5 hex directly
@@ -965,13 +963,13 @@ object Multimodal {
     }
 
   private def videoHashView(spark: SparkSession, dir: String): String =
-    graft.core.SessionCache.getOrElseUpdate(spark, "vhash", dir) {
+    graft.core.Materialize.view(spark, "vhash", dir, graft.core.Materialize.Checkpoint) {
       import spark.implicits._
       import org.apache.spark.sql.functions.col
       val docs = graft.core.Tables.load(spark, dir, "documents")
         .select(col("doc_id"), col("text")).where(col("text").isNotNull)
         .as[(Long, String)]
-      val hashed = docs.mapPartitions { it =>
+      docs.mapPartitions { it =>
         val md = java.security.MessageDigest.getInstance("MD5")
         it.flatMap { case (id, text) =>
           // 16 gray 8×8 frames; frame f's 64 pixels from md5("v<f>:<c>:"+text)
@@ -1000,10 +998,7 @@ object Multimodal {
               })
             }
         }
-      }.toDF("id", "frame_idx", "fhash").localCheckpoint(eager = true)
-      val v = "__graft_vhash_" + java.lang.Integer.toHexString(dir.hashCode)
-      hashed.createOrReplaceTempView(v)
-      v
+      }.toDF("id", "frame_idx", "fhash")
     }
 
   /** Frame-sample entry: per sampled frame of every rendered video, the

@@ -153,9 +153,7 @@ object Packer {
        |${curriculumRankTail("graded")(d)}""".stripMargin
 
   private def registered(spark: SparkSession, dir: String): String = {
-    graft.core.Tables.load(spark, dir, "documents")
-      .createOrReplaceTempView("__graft_pack_docs")
-    "__graft_pack_docs"
+    graft.core.Tables.view(spark, dir, "documents")
   }
 
   def run(spark: SparkSession, dir: String): DataFrame =
@@ -171,13 +169,13 @@ object Packer {
 
   def runCurriculum(spark: SparkSession, dir: String): DataFrame = {
     // land graded once per call — the rank tail reads it twice
-    val gradedV = "__graft_pack_graded_" +
-      java.lang.Integer.toHexString(dir.hashCode)
-    spark.sql(
+    val graded = spark.sql(
       s"""WITH ${curriculumGradedCtes(registered(spark, dir))(SparkDialect)}
          |SELECT * FROM graded""".stripMargin)
-      .localCheckpoint(eager = true).createOrReplaceTempView(gradedV)
-    spark.sql(s"WITH ${curriculumRankTail(gradedV)(SparkDialect)}")
+      .localCheckpoint(eager = true)
+    graft.core.Materialize.sql(spark, graded) { case Seq(g) =>
+      s"WITH ${curriculumRankTail(g)(SparkDialect)}"
+    }
   }
   def duckCurriculumSql(): String = curriculumSql("documents")(DuckDialect)
 

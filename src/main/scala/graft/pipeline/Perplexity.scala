@@ -225,17 +225,12 @@ object Perplexity {
     * cutoff derives from it), so it follows the landed-relation
     * convention (Retrieval hit lists, the BPE merge table). */
   private def scoredView(spark: SparkSession, dir: String): String =
-    graft.core.SessionCache.getOrElseUpdate(spark, "lmscored", dir) {
+    graft.core.Materialize.view(spark, "lm_scored", dir, graft.core.Materialize.Checkpoint) {
       val (bigV, ctxV, vocV, v) = modelViews(spark, dir)
-      val raw = "__graft_lm_docs_" + java.lang.Integer.toHexString(dir.hashCode)
-      graft.core.Tables.load(spark, dir, "documents").createOrReplaceTempView(raw)
-      val scoredV = "__graft_lm_scored_" +
-        java.lang.Integer.toHexString(dir.hashCode)
+      val raw = graft.core.Tables.view(spark, dir, "documents")
       spark.sql(
         s"""WITH ${scoreSparkCtes(raw, bigV, ctxV, vocV, v.toString)}
            |SELECT * FROM scored""".stripMargin)
-        .localCheckpoint(eager = true).createOrReplaceTempView(scoredV)
-      scoredV
     }
 
   /** The frozen model for the streaming ingest gate: bigram counts
@@ -253,30 +248,24 @@ object Perplexity {
     (big, ctx, v)
   }
 
-  private def modelViews(spark: SparkSession, dir: String): (String, String, String, Long) =
-    graft.core.SessionCache
-      .getOrElseUpdate(spark, "lmmodel", dir) {
-        val raw = "__graft_lm_docs_" + java.lang.Integer.toHexString(dir.hashCode)
-        graft.core.Tables.load(spark, dir, "documents").createOrReplaceTempView(raw)
-        val suffix = java.lang.Integer.toHexString(dir.hashCode)
-        val bigName = s"__graft_lm_big_$suffix"
-        val ctxName = s"__graft_lm_ctx_$suffix"
-        val vocName = s"__graft_lm_voc_$suffix"
-        val d = SparkDialect
-        spark.sql(
-          s"""WITH tw AS (${trainWords(raw)(d)}),
-             |tb0 AS (
-             |  SELECT COALESCE(LAG(word) OVER (PARTITION BY id ORDER BY pos), '<s>') AS prev,
-             |         word AS w
-             |    FROM tw
-             |)
-             |SELECT prev, w, COUNT(*) AS c FROM tb0 GROUP BY prev, w""".stripMargin)
-          .localCheckpoint(eager = true).createOrReplaceTempView(bigName)
-        spark.sql(s"SELECT prev, SUM(c) AS cc FROM $bigName GROUP BY prev")
-          .localCheckpoint(eager = true).createOrReplaceTempView(ctxName)
-        spark.sql(s"SELECT DISTINCT w AS word FROM $bigName")
-          .localCheckpoint(eager = true).createOrReplaceTempView(vocName)
-        val vVal = spark.sql(s"SELECT COUNT(*) FROM $vocName").head().getLong(0) + 1
-        (bigName, ctxName, vocName, vVal)
-      }
+  private def modelViews(spark: SparkSession, dir: String): (String, String, String, Long) = {
+    import graft.core.Materialize.{view, Checkpoint}
+    val bigV = view(spark, "lm_big", dir, Checkpoint) {
+      spark.sql(
+        s"""WITH tw AS (${trainWords(graft.core.Tables.view(spark, dir, "documents"))(SparkDialect)}),
+           |tb0 AS (
+           |  SELECT COALESCE(LAG(word) OVER (PARTITION BY id ORDER BY pos), '<s>') AS prev,
+           |         word AS w
+           |    FROM tw
+           |)
+           |SELECT prev, w, COUNT(*) AS c FROM tb0 GROUP BY prev, w""".stripMargin)
+    }
+    val ctxV = view(spark, "lm_ctx", dir, Checkpoint)(
+      spark.sql(s"SELECT prev, SUM(c) AS cc FROM $bigV GROUP BY prev"))
+    val vocV = view(spark, "lm_voc", dir, Checkpoint)(
+      spark.sql(s"SELECT DISTINCT w AS word FROM $bigV"))
+    val v = graft.core.SessionCache.getOrElseUpdate(spark, "lm_vocab_size", dir)(
+      spark.sql(s"SELECT COUNT(*) FROM $vocV").head().getLong(0) + 1)
+    (bigV, ctxV, vocV, v)
+  }
 }

@@ -79,9 +79,8 @@ object PiiScrub {
        |${sql("blob")(d)}""".stripMargin
 
   def run(spark: SparkSession, dir: String): DataFrame = {
-    graft.core.Tables.load(spark, dir, "customer", parallelize = false)
-      .createOrReplaceTempView("__graft_pii_cust")
-    spark.sql(entrySql("__graft_pii_cust")(SparkDialect))
+    val customer = graft.core.Tables.view(spark, dir, "customer", parallelize = false)
+    spark.sql(entrySql(customer)(SparkDialect))
   }
 
   def duckSql(): String = entrySql("customer")(DuckDialect)

@@ -60,9 +60,8 @@ object PrioritySample {
   }
 
   def run(spark: SparkSession, dir: String): DataFrame = {
-    graft.core.Tables.load(spark, dir, "documents", parallelize = false)
-      .createOrReplaceTempView("__graft_prio_docs")
-    spark.sql(sql("__graft_prio_docs")(SparkDialect))
+    val documents = graft.core.Tables.view(spark, dir, "documents", parallelize = false)
+    spark.sql(sql(documents)(SparkDialect))
   }
 
   def duckSql(): String = sql("documents")(DuckDialect)
@@ -98,9 +97,8 @@ object PrioritySample {
   }
 
   def runWeighted(spark: SparkSession, dir: String): DataFrame = {
-    graft.core.Tables.load(spark, dir, "documents", parallelize = false)
-      .createOrReplaceTempView("__graft_prio_docs")
-    spark.sql(weightedSql("__graft_prio_docs")(SparkDialect))
+    val documents = graft.core.Tables.view(spark, dir, "documents", parallelize = false)
+    spark.sql(weightedSql(documents)(SparkDialect))
   }
 
   def duckWeightedSql(): String = weightedSql("documents")(DuckDialect)

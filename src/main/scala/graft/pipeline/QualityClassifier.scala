@@ -90,8 +90,6 @@ object QualityClassifier {
   }
 
   def run(spark: SparkSession, dir: String): DataFrame = {
-    graft.core.Tables.load(spark, dir, "documents")
-      .createOrReplaceTempView("__graft_qc_docs")
-    spark.sql(sparkSql("__graft_qc_docs"))
+    spark.sql(sparkSql(graft.core.Tables.view(spark, dir, "documents")))
   }
 }

@@ -62,30 +62,21 @@ object QualityGate {
        | ORDER BY doc_id""".stripMargin
 
   def run(spark: SparkSession, dir: String): DataFrame = {
-    val docs = "__graft_qg_docs"
-    graft.core.Tables.load(spark, dir, "documents")
-      .createOrReplaceTempView(docs)
-    val sfx = java.lang.Integer.toHexString(dir.hashCode)
-    val clV = s"__graft_qg_cl_$sfx"
-    Dedup.runClusters(spark, dir).createOrReplaceTempView(clV)
+    val docs = graft.core.Tables.view(spark, dir, "documents")
     // text analysis rides its own single corpus scan; repetition,
     // boilerplate and cluster labels join the memoized landed outputs
     // (the CorpusStats composition pattern)
-    spark.sql(bodySql(docs,
-      s"(${TextAnalysis.sql(docs)(SparkDialect)})",
-      Repetition.outView(spark, dir),
-      Boilerplate.outView(spark, dir), clV))
+    graft.core.Materialize.sql(spark, Dedup.runClusters(spark, dir)) { case Seq(clusters) =>
+      bodySql(docs, s"(${TextAnalysis.sql(docs)(SparkDialect)})",
+        Repetition.outView(spark, dir), Boilerplate.outView(spark, dir), clusters)
+    }
   }
 
   /** The materialized gate decision, memoized per (session, dir) — the
     * post-gate budget rollup joins this instead of re-deriving it. */
   def outView(spark: SparkSession, dir: String): String =
-    graft.core.SessionCache.getOrElseUpdate(spark, "qgout", dir) {
-      val v = "__graft_qg_out_" + java.lang.Integer.toHexString(dir.hashCode)
-      run(spark, dir).localCheckpoint(eager = true)
-        .createOrReplaceTempView(v)
-      v
-    }
+    graft.core.Materialize.view(spark, "qg_out", dir, graft.core.Materialize.Checkpoint)(
+      run(spark, dir))
 
   /** The gate as one self-contained statement over `table` — every
     * signal relation nested inline (the oracle's form; the Spark run

@@ -93,9 +93,7 @@ object Reconcile {
   }
 
   def run(spark: SparkSession, dir: String): DataFrame = {
-    graft.core.Tables.load(spark, dir, "customer")
-      .createOrReplaceTempView("__graft_rec_cust")
-    spark.sql(sparkSql("__graft_rec_cust"))
+    spark.sql(sparkSql(graft.core.Tables.view(spark, dir, "customer")))
   }
 
   def duckSql(): String = sql("customer")

@@ -113,18 +113,8 @@ object Repetition {
   /** The materialized grams view, memoized per (session, dir) — shared
     * by the repetition entry and the corpus rollup. */
   def gramsView(spark: SparkSession, dir: String): String =
-    graft.core.SessionCache.getOrElseUpdate(spark, "repgrams", dir) {
-      val docs = "__graft_rep_docs_" +
-        java.lang.Integer.toHexString(dir.hashCode)
-      graft.core.Tables.load(spark, dir, "documents")
-        .createOrReplaceTempView(docs)
-      val v = "__graft_rep_grams_" +
-        java.lang.Integer.toHexString(dir.hashCode)
-      spark.sql(gramsSparkSql(docs))
-        .localCheckpoint(eager = true)
-        .createOrReplaceTempView(v)
-      v
-    }
+    graft.core.Materialize.view(spark, "rep_grams", dir, graft.core.Materialize.Checkpoint)(
+      spark.sql(gramsSparkSql(graft.core.Tables.view(spark, dir, "documents"))))
 
   def run(spark: SparkSession, dir: String): DataFrame =
     spark.sql(bodySql(gramsView(spark, dir)))
@@ -133,13 +123,8 @@ object Repetition {
     * memoized per (session, dir) — the corpus rollup joins this
     * instead of re-running the gram passes. */
   def outView(spark: SparkSession, dir: String): String =
-    graft.core.SessionCache.getOrElseUpdate(spark, "repout", dir) {
-      val v = "__graft_rep_out_" +
-        java.lang.Integer.toHexString(dir.hashCode)
-      run(spark, dir).localCheckpoint(eager = true)
-        .createOrReplaceTempView(v)
-      v
-    }
+    graft.core.Materialize.view(spark, "rep_out", dir, graft.core.Materialize.Checkpoint)(
+      run(spark, dir))
 
   def duckSql(): String = sql("documents")(DuckDialect)
 }

@@ -261,21 +261,13 @@ object Retrieval {
   private val sd: Dialect = SparkDialect
 
   private def views(spark: SparkSession, dir: String): (String, String) = {
-    graft.core.Tables.load(spark, dir, "documents")
-      .createOrReplaceTempView("__graft_retr_docs")
-    graft.core.Tables.load(spark, dir, "embeddings")
-      .createOrReplaceTempView("__graft_retr_emb")
-    ("__graft_retr_docs", "__graft_retr_emb")
+    val embeddings = graft.core.Tables.view(spark, dir, "embeddings")
+    (graft.core.Tables.view(spark, dir, "documents"), embeddings)
   }
 
   private def landed(spark: SparkSession, dir: String, key: String)
                     (body: => DataFrame): String =
-    graft.core.SessionCache.getOrElseUpdate(spark, s"retr_$key", dir) {
-      val v = s"__graft_retr_${key}_" +
-        java.lang.Integer.toHexString(dir.hashCode)
-      body.localCheckpoint(eager = true).createOrReplaceTempView(v)
-      v
-    }
+    graft.core.Materialize.view(spark, s"retr_$key", dir, graft.core.Materialize.Checkpoint)(body)
 
   private def bmView(spark: SparkSession, dir: String): String =
     landed(spark, dir, "bm") {

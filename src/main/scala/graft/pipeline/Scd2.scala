@@ -121,9 +121,7 @@ object Scd2 {
   }
 
   def run(spark: SparkSession, dir: String): DataFrame = {
-    graft.core.Tables.load(spark, dir, "customer")
-      .createOrReplaceTempView("__graft_scd2_cust")
-    spark.sql(sparkSql("__graft_scd2_cust"))
+    spark.sql(sparkSql(graft.core.Tables.view(spark, dir, "customer")))
   }
 
   def duckSql(): String = sql("customer")

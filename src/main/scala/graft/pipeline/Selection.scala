@@ -143,22 +143,14 @@ object Selection {
   /** The landed scored relation + candidate docs view, memoized per
     * (session, dir) — runDsir's cutoff election, the final join, and
     * the token-budget selection all read it. */
-  private def scoredView(spark: SparkSession, dir: String): String = {
-    graft.core.Tables.load(spark, dir, "documents")
-      .createOrReplaceTempView("__graft_dsir_docs")
-    graft.core.SessionCache.getOrElseUpdate(spark, "dsir_scored", dir) {
-      val scored = spark.sql(dsirScoredSql("__graft_dsir_docs")(SparkDialect))
-        .localCheckpoint(true)
-      scored.createOrReplaceTempView("__graft_dsir_scored")
-      true
-    }
-    "__graft_dsir_scored"
-  }
+  private[graft] def scoredView(spark: SparkSession, dir: String): String =
+    graft.core.Materialize.view(spark, "dsir_scored", dir, graft.core.Materialize.Checkpoint)(
+      spark.sql(dsirScoredSql(graft.core.Tables.view(spark, dir, "documents"))(SparkDialect)))
 
   def runDsir(spark: SparkSession, dir: String): DataFrame = {
-    scoredView(spark, dir)
+    val scored = scoredView(spark, dir)
     val cut = spark.sql(
-      s"""SELECT dsir_score, doc_id FROM __graft_dsir_scored
+      s"""SELECT dsir_score, doc_id FROM $scored
          | ORDER BY dsir_score DESC, doc_id LIMIT $SelectTop""".stripMargin)
       .collect()
     val selCond =
@@ -174,9 +166,9 @@ object Selection {
          |       CAST(COALESCE(r.dsir_score, 0) AS BIGINT) AS dsir_score,
          |       CAST(COALESCE(CASE WHEN $selCond THEN 1 ELSE 0 END, 0)
          |            AS INT) AS selected
-         |  FROM (SELECT doc_id FROM __graft_dsir_docs
+         |  FROM (SELECT doc_id FROM ${graft.core.Tables.view(spark, dir, "documents")}
          |         WHERE source <> '$TargetSource') c
-         |  LEFT JOIN __graft_dsir_scored r ON r.doc_id = c.doc_id
+         |  LEFT JOIN $scored r ON r.doc_id = c.doc_id
          | ORDER BY c.doc_id""".stripMargin)
   }
 
@@ -236,7 +228,7 @@ object Selection {
       s"SELECT MIN(dsir_score) AS mn, MAX(dsir_score) AS mx FROM $scored")
       .collect()(0)
     val cands =
-      s"""(SELECT doc_id FROM __graft_dsir_docs
+      s"""(SELECT doc_id FROM ${graft.core.Tables.view(spark, dir, "documents")}
          |  WHERE source <> '$TargetSource') c""".stripMargin
     if (bounds.isNullAt(0))
       // empty scored relation: every candidate lands unselected
@@ -336,13 +328,12 @@ object Selection {
 
   /** Spark path: every input is a landed relation. */
   def runLedger(spark: SparkSession, dir: String): DataFrame = {
-    graft.core.Tables.load(spark, dir, "documents")
-      .createOrReplaceTempView("__graft_ledger_docs")
+    val documents = graft.core.Tables.view(spark, dir, "documents")
     val comp = Dedup.clusterCompView(spark, dir)
     val gate = graft.pipeline.QualityGate.outView(spark, dir)
     val hits = Dedup.decontHitsView(spark, dir)
     spark.sql(
-      s"WITH ${ledgerTail("__graft_ledger_docs", comp, gate, hits)(SparkDialect)}")
+      s"WITH ${ledgerTail(documents, comp, gate, hits)(SparkDialect)}")
   }
 
   /** The FROZEN per-feature weight table the batch scorer implies:
@@ -352,18 +343,17 @@ object Selection {
     * score row-locally against the landed corpus statistics (see
     * [[graft.streaming.StreamMonitors.ingestDsirScore]]). */
   def dsirWeightMap(spark: SparkSession, dir: String): Map[Long, Long] = {
-    graft.core.Tables.load(spark, dir, "documents")
-      .createOrReplaceTempView("__graft_dsir_docs")
+    val docs = graft.core.Tables.view(spark, dir, "documents")
     val d: Dialect = SparkDialect
     val f = featExpr(d)
     val rows = spark.sql(
       s"""WITH words AS (
-         |  ${d.wordsRel("__graft_dsir_docs", "doc_id", "text")}
+         |  ${d.wordsRel(docs, "doc_id", "text")}
          |),
          |feat AS (
          |  SELECT w.id, $f AS f,
          |         CASE WHEN dd.source = '$TargetSource' THEN 1 ELSE 0 END AS is_tgt
-         |    FROM words w JOIN __graft_dsir_docs dd ON dd.doc_id = w.id
+         |    FROM words w JOIN $docs dd ON dd.doc_id = w.id
          |),
          |tot AS (
          |  SELECT (SELECT COUNT(*) FROM feat WHERE is_tgt = 1) AS tt,
@@ -430,9 +420,7 @@ object Selection {
   }
 
   def runSubstringDup(spark: SparkSession, dir: String): DataFrame = {
-    graft.core.Tables.load(spark, dir, "documents")
-      .createOrReplaceTempView("__graft_ssd_docs")
-    spark.sql(substringDupSql("__graft_ssd_docs")(SparkDialect))
+    spark.sql(substringDupSql(graft.core.Tables.view(spark, dir, "documents"))(SparkDialect))
   }
 
   def substringDupDuckSql(): String = substringDupSql("documents")(DuckDialect)
@@ -514,9 +502,7 @@ object Selection {
   }
 
   def runSubstringRewrite(spark: SparkSession, dir: String): DataFrame = {
-    graft.core.Tables.load(spark, dir, "documents")
-      .createOrReplaceTempView("__graft_ssr_docs")
-    spark.sql(substringRewriteSql("__graft_ssr_docs")(SparkDialect))
+    spark.sql(substringRewriteSql(graft.core.Tables.view(spark, dir, "documents"))(SparkDialect))
   }
 
   /** 13-gram eval decontamination — the canonical published
@@ -560,9 +546,7 @@ object Selection {
   }
 
   def runNgramDecontaminate(spark: SparkSession, dir: String): DataFrame = {
-    graft.core.Tables.load(spark, dir, "documents")
-      .createOrReplaceTempView("__graft_ngd_docs")
-    spark.sql(ngramDecontaminateSql("__graft_ngd_docs")(SparkDialect))
+    spark.sql(ngramDecontaminateSql(graft.core.Tables.view(spark, dir, "documents"))(SparkDialect))
   }
 
   def ngramDecontaminateDuckSql(): String =
@@ -666,11 +650,10 @@ object Selection {
     * saves, and the inline form stays one statement for the planner to
     * dedupe. Kept the single-statement form.) */
   def runFunnel(spark: SparkSession, dir: String): DataFrame = {
-    graft.core.Tables.load(spark, dir, "documents")
-      .createOrReplaceTempView("__graft_funnel_docs")
+    val documents = graft.core.Tables.view(spark, dir, "documents")
     val comp = Dedup.clusterCompView(spark, dir)
     val gate = graft.pipeline.QualityGate.outView(spark, dir)
-    spark.sql(s"WITH ${funnelTail("__graft_funnel_docs", comp, gate)(SparkDialect)}")
+    spark.sql(s"WITH ${funnelTail(documents, comp, gate)(SparkDialect)}")
   }
 
   def substringRewriteDuckSql(): String = substringRewriteSql("documents")(DuckDialect)
@@ -722,19 +705,17 @@ object Selection {
 
   /** Spark path: reads the landed component labels. */
   def runSplit(spark: SparkSession, dir: String): DataFrame = {
-    graft.core.Tables.load(spark, dir, "documents")
-      .createOrReplaceTempView("__graft_split_docs")
+    val documents = graft.core.Tables.view(spark, dir, "documents")
     val comp = Dedup.clusterCompView(spark, dir)
-    spark.sql(s"WITH ${splitTail("__graft_split_docs", comp)(SparkDialect)}")
+    spark.sql(s"WITH ${splitTail(documents, comp)(SparkDialect)}")
   }
 
   /** Per-doc split assignment — the relation the spec audits for
     * straddling clusters; not an oracle entry (the rollup is). */
   private[graft] def splitAssignments(spark: SparkSession, dir: String): DataFrame = {
-    graft.core.Tables.load(spark, dir, "documents")
-      .createOrReplaceTempView("__graft_split_docs")
+    val splitDocs = graft.core.Tables.view(spark, dir, "documents")
     val comp = Dedup.clusterCompView(spark, dir)
-    spark.sql(s"""WITH ${splitCtes("__graft_split_docs", comp)(SparkDialect)}
+    spark.sql(s"""WITH ${splitCtes(splitDocs, comp)(SparkDialect)}
                  |SELECT doc_id, unit_id, split FROM sp""".stripMargin)
   }
 
@@ -826,15 +807,15 @@ object Selection {
        |${calibRankTail("dqb")(d)}""".stripMargin
 
   def runCalibration(spark: SparkSession, dir: String): DataFrame = {
-    graft.core.Tables.load(spark, dir, "documents")
-      .createOrReplaceTempView("__graft_calib_docs")
+    val documents = graft.core.Tables.view(spark, dir, "documents")
     val comp = Dedup.clusterCompView(spark, dir)
     // land dqb once per call — the tail reads it twice (bucket counts,
     // rank join) and the qx scan must not run twice
-    val dqbV = "__graft_calib_dqb"
-    spark.sql(s"""WITH ${calibDqbCtes("__graft_calib_docs", comp)(SparkDialect)}
-                 |SELECT * FROM dqb""".stripMargin)
-      .localCheckpoint(eager = true).createOrReplaceTempView(dqbV)
-    spark.sql(s"WITH ${calibRankTail(dqbV)(SparkDialect)}")
+    val dqb = spark.sql(s"""WITH ${calibDqbCtes(documents, comp)(SparkDialect)}
+                           |SELECT * FROM dqb""".stripMargin)
+      .localCheckpoint(eager = true)
+    graft.core.Materialize.sql(spark, dqb) { case Seq(v) =>
+      s"WITH ${calibRankTail(v)(SparkDialect)}"
+    }
   }
 }

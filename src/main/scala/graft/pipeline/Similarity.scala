@@ -638,26 +638,31 @@ object Similarity {
     * build job that writes the corpus bucket-partitioned to storage. */
   private final case class AnnViews(base: String, seeds: String, centroids: String)
 
-  private def annViews(spark: SparkSession, dir: String): AnnViews =
-    graft.core.SessionCache.getOrElseUpdate(spark, "annviews", dir) {
-      val d: Dialect = SparkDialect
-      val t = register(spark, dir)
-      val hex = java.lang.Integer.toHexString(dir.hashCode)
-      val sv = s"__graft_ann_seeds_$hex"
-      spark.sql(s"WITH ${seedsCte(t, DefaultCentroids)(d)} SELECT * FROM seeds")
-        .localCheckpoint(eager = true).createOrReplaceTempView(sv)
-      val cv = s"__graft_ann_centroids_$hex"
-      spark.sql(s"WITH ${centroidsCtes(t)(d)} SELECT * FROM centroids")
-        .localCheckpoint(eager = true).createOrReplaceTempView(cv)
-      val bv = s"__graft_ann_base_$hex"
+  private def annViews(spark: SparkSession, dir: String): AnnViews = {
+    val sv = annSeedsView(spark, dir)
+    val cv = graft.core.Materialize.view(spark, "ann_centroids", dir,
+      graft.core.Materialize.Checkpoint)(spark.sql(
+      s"WITH ${centroidsCtes(embeddingsView(spark, dir))(d)} SELECT * FROM centroids"))
+    AnnViews(annBaseView(spark, dir), sv, cv)
+  }
+
+  private def annSeedsView(spark: SparkSession, dir: String): String =
+    graft.core.Materialize.view(spark, "ann_seeds", dir, graft.core.Materialize.Checkpoint)(
       spark.sql(
-        s"""WITH ${assignCte(t, sv)(d)}
+        s"WITH ${seedsCte(embeddingsView(spark, dir), DefaultCentroids)(d)} SELECT * FROM seeds"))
+
+  /** The checkpointed index base: every row with its sign-LSH bucket
+    * and exclusive seed assignment. */
+  private[graft] def annBaseView(spark: SparkSession, dir: String): String = {
+    val sv = annSeedsView(spark, dir)
+    graft.core.Materialize.view(spark, "ann_base", dir, graft.core.Materialize.Checkpoint) {
+      spark.sql(
+        s"""WITH ${assignCte(embeddingsView(spark, dir), sv)(d)}
            |SELECT vec_id, label, embedding,
            |       ${bucketExpr("embedding")(d)} AS bucket, seed_id
            |  FROM assign""".stripMargin)
-        .localCheckpoint(eager = true).createOrReplaceTempView(bv)
-      AnnViews(bv, sv, cv)
     }
+  }
 
   /** A method's ranked hit relation, landed ONCE per (session, dir,
     * method): the probe body runs over the index views, its (tiny,
@@ -670,13 +675,8 @@ object Similarity {
     * real cluster this is the ANN serving table a query layer reads. */
   private def hitsView(spark: SparkSession, dir: String, method: String)
                       (body: AnnViews => String): String =
-    graft.core.SessionCache.getOrElseUpdate(spark, "annhits", (dir, method)) {
-      val v = s"__graft_ann_${method}_" +
-        java.lang.Integer.toHexString(dir.hashCode)
-      spark.sql(body(annViews(spark, dir)))
-        .localCheckpoint(eager = true).createOrReplaceTempView(v)
-      v
-    }
+    graft.core.Materialize.view(spark, s"ann_$method", dir, graft.core.Materialize.Checkpoint)(
+      spark.sql(body(annViews(spark, dir))))
 
   private val d: Dialect = SparkDialect
 
@@ -702,11 +702,8 @@ object Similarity {
     spark.sql(recallBody(truth, methods, k)(d))
   }
 
-  private def register(spark: SparkSession, dir: String): String = {
-    graft.core.Tables.load(spark, dir, "embeddings")
-      .createOrReplaceTempView("__graft_emb")
-    "__graft_emb"
-  }
+  private def embeddingsView(spark: SparkSession, dir: String): String =
+    graft.core.Tables.view(spark, dir, "embeddings")
 
   private def ivfView(spark: SparkSession, dir: String): String =
     hitsView(spark, dir, "ivf")(v => ivfTail(v.base, v.centroids, 5, 5, 1)(d))
@@ -963,12 +960,9 @@ object Similarity {
     * transition counts land once, the ledger reads them. */
   def runKmeansRefine(spark: SparkSession, dir: String): DataFrame = {
     val v = annViews(spark, dir)
-    val pv = graft.core.SessionCache.getOrElseUpdate(spark, "kmeanspairs", dir) {
-      val name = s"__graft_km_pairs_${java.lang.Integer.toHexString(dir.hashCode)}"
-      spark.sql(kmeansPairsBody(register(spark, dir), v.base)(d))
-        .localCheckpoint(eager = true).createOrReplaceTempView(name)
-      name
-    }
+    val pv = graft.core.Materialize.view(spark, "km_pairs", dir,
+      graft.core.Materialize.Checkpoint)(
+      spark.sql(kmeansPairsBody(embeddingsView(spark, dir), v.base)(d)))
     spark.sql(kmeansLedgerBody(pv, v.seeds))
   }
 
@@ -1136,15 +1130,13 @@ object Similarity {
     * partitionBy writes only the touched bucket directories; probes
     * keep partition-pruning over old + new files alike. */
   def appendIndex(spark: SparkSession, batch: DataFrame, outPath: String): Unit = {
-    batch.createOrReplaceTempView("__graft_append_batch")
-    spark.read.parquet(s"${outPath}_seeds")
-      .createOrReplaceTempView("__graft_append_seeds")
-    spark.sql(
-      s"""WITH ${assignCte("__graft_append_batch", "__graft_append_seeds")(d)}
-         |SELECT vec_id, label, embedding,
-         |       ${bucketExpr("embedding")(d)} AS bucket, seed_id
-         |  FROM assign""".stripMargin)
-      .write.mode("append").partitionBy("bucket").parquet(outPath)
+    graft.core.Materialize.sql(spark, batch, spark.read.parquet(s"${outPath}_seeds")) {
+      case Seq(b, seeds) =>
+        s"""WITH ${assignCte(b, seeds)(d)}
+           |SELECT vec_id, label, embedding,
+           |       ${bucketExpr("embedding")(d)} AS bucket, seed_id
+           |  FROM assign""".stripMargin
+    }.write.mode("append").partitionBy("bucket").parquet(outPath)
   }
 
   /** Per-bucket FILE count of the persisted index — the small-files
@@ -1305,5 +1297,5 @@ object Similarity {
   def runQuantized(spark: SparkSession, dir: String): DataFrame =
     spark.sql(s"SELECT * FROM ${quantView(spark, dir)} ORDER BY query_id, rank")
   def runLshFold(spark: SparkSession, dir: String): DataFrame =
-    spark.sql(lshFoldSql(register(spark, dir)))
+    spark.sql(lshFoldSql(embeddingsView(spark, dir)))
 }

@@ -55,9 +55,8 @@ object StratifiedSample {
   }
 
   def run(spark: SparkSession, dir: String): DataFrame = {
-    graft.core.Tables.load(spark, dir, "documents", parallelize = false)
-      .createOrReplaceTempView("__graft_strat_docs")
-    spark.sql(sql("__graft_strat_docs")(SparkDialect))
+    val documents = graft.core.Tables.view(spark, dir, "documents", parallelize = false)
+    spark.sql(sql(documents)(SparkDialect))
   }
 
   def duckSql(): String = sql("documents")(DuckDialect)

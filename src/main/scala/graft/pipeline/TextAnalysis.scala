@@ -77,9 +77,7 @@ object TextAnalysis {
   /** Regexp-replace with the 'g' flag spelled per dialect (the shared
     * Dialect.regexpReplace already renders globally on both). */
   def run(spark: SparkSession, dir: String): DataFrame = {
-    graft.core.Tables.load(spark, dir, "documents")
-      .createOrReplaceTempView("__graft_docs")
-    spark.sql(sql("__graft_docs")(SparkDialect))
+    spark.sql(sql(graft.core.Tables.view(spark, dir, "documents"))(SparkDialect))
   }
 
   def duckSql(): String = sql("documents")(DuckDialect)
@@ -117,9 +115,7 @@ object TokenizerFertility {
   }
 
   def run(spark: SparkSession, dir: String): DataFrame = {
-    graft.core.Tables.load(spark, dir, "documents")
-      .createOrReplaceTempView("__graft_fert_docs")
-    spark.sql(sql("__graft_fert_docs")(SparkDialect))
+    spark.sql(sql(graft.core.Tables.view(spark, dir, "documents"))(SparkDialect))
   }
 
   def duckSql(): String = sql("documents")(DuckDialect)
@@ -172,9 +168,7 @@ object VocabCoverage {
        | ORDER BY source""".stripMargin
 
   def run(spark: SparkSession, dir: String): DataFrame = {
-    graft.core.Tables.load(spark, dir, "documents")
-      .createOrReplaceTempView("__graft_vocab_docs")
-    spark.sql(sql("__graft_vocab_docs")(SparkDialect))
+    spark.sql(sql(graft.core.Tables.view(spark, dir, "documents"))(SparkDialect))
   }
 
   def duckSql(): String = sql("documents")(DuckDialect)

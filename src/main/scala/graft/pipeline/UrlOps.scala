@@ -123,9 +123,8 @@ object UrlOps {
   }
 
   def runNormalize(spark: SparkSession, dir: String): DataFrame = {
-    graft.core.Tables.load(spark, dir, "documents", parallelize = false)
-      .createOrReplaceTempView("__graft_url_docs")
-    spark.sql(normalizeSql("__graft_url_docs")(SparkDialect))
+    val documents = graft.core.Tables.view(spark, dir, "documents", parallelize = false)
+    spark.sql(normalizeSql(documents)(SparkDialect))
   }
 
   def duckNormalizeSql(): String = normalizeSql("documents")(DuckDialect)
@@ -159,9 +158,8 @@ object UrlOps {
   }
 
   def runDomainCap(spark: SparkSession, dir: String): DataFrame = {
-    graft.core.Tables.load(spark, dir, "documents", parallelize = false)
-      .createOrReplaceTempView("__graft_url_docs")
-    spark.sql(domainCapSql("__graft_url_docs")(SparkDialect))
+    val documents = graft.core.Tables.view(spark, dir, "documents", parallelize = false)
+    spark.sql(domainCapSql(documents)(SparkDialect))
   }
 
   def duckDomainCapSql(): String = domainCapSql("documents")(DuckDialect)

@@ -27,16 +27,14 @@ object ApproxProfiler {
 
   def profile(spark: SparkSession, dir: String, table: String,
               rsd: Double = 0.02, pctAccuracy: Int = 10000): DataFrame =
-    graft.core.SessionCache.getOrElseUpdate(
-      spark, "approxprofiler", (dir, table, rsd, pctAccuracy))(
-      compute(spark, dir, table, rsd, pctAccuracy))
+    spark.table(graft.core.Materialize.view(
+      spark, "approx_profile", (dir, table, rsd, pctAccuracy))(
+      compute(spark, dir, table, rsd, pctAccuracy)))
 
   private def compute(spark: SparkSession, dir: String, table: String,
                       rsd: Double, pctAccuracy: Int): DataFrame = {
-    val df = graft.core.Tables.load(spark, dir, table)
-    val v = s"__graft_approx_$table"
-    df.createOrReplaceTempView(v)
-    val cols = df.schema.fields
+    val v = graft.core.Tables.view(spark, dir, table)
+    val cols = spark.table(v).schema.fields
     val sel = cols.zipWithIndex.flatMap { case (f, i) =>
       val c = s"`${f.name}`"
       val isN = GeneralType.of(f.dataType) == "N"
@@ -155,10 +153,8 @@ object ApproxProfiler {
     * shape directly. */
   def aggregateFrame(spark: SparkSession, dir: String, table: String,
                      rsd: Double = 0.02): DataFrame = {
-    val df = graft.core.Tables.load(spark, dir, table)
-    val v = s"__graft_approxagg_$table"
-    df.createOrReplaceTempView(v)
-    val sel = df.schema.fields.zipWithIndex.map { case (f, i) =>
+    val v = graft.core.Tables.view(spark, dir, table)
+    val sel = spark.table(v).schema.fields.zipWithIndex.map { case (f, i) =>
       s"CAST(approx_count_distinct(`${f.name}`, $rsd) AS BIGINT) AS v_$i"
     }
     spark.sql(s"SELECT COUNT(*) AS record_ct, ${sel.mkString(", ")} FROM $v")

@@ -58,13 +58,8 @@ object Benford {
       .mkString("SELECT * FROM (\n", "\nUNION ALL\n", "\n) u ORDER BY column_name, digit")
 
   def run(spark: SparkSession, dir: String): DataFrame = {
-    val tabs = Columns.map(_._1).distinct.map { t =>
-      val v = s"__graft_benford_$t"
-      graft.core.Tables.load(spark, dir, t, parallelize = false)
-        .createOrReplaceTempView(v)
-      t -> v
-    }.toMap
-    spark.sql(sql(tabs)(SparkDialect))
+    spark.sql(sql(Columns.map(_._1).distinct.map(t =>
+      t -> graft.core.Tables.view(spark, dir, t, parallelize = false)).toMap)(SparkDialect))
   }
 
   def duckSql(): String =

@@ -63,9 +63,7 @@ object ChisqDrift {
        | ORDER BY category, slice""".stripMargin
 
   def run(spark: SparkSession, dir: String): DataFrame = {
-    graft.core.Tables.load(spark, dir, "orders", parallelize = false)
-      .createOrReplaceTempView("__graft_chisq_ord")
-    spark.sql(sql("__graft_chisq_ord")(SparkDialect))
+    spark.sql(sql(graft.core.Tables.view(spark, dir, "orders", parallelize = false))(SparkDialect))
   }
 
   def duckSql(): String = sql("orders")(DuckDialect)

@@ -61,9 +61,7 @@ object Correlations {
   }
 
   def run(spark: SparkSession, dir: String): DataFrame = {
-    graft.core.Tables.load(spark, dir, Table, parallelize = false)
-      .createOrReplaceTempView("__graft_corr_l")
-    spark.sql(sql("__graft_corr_l")(SparkDialect))
+    spark.sql(sql(graft.core.Tables.view(spark, dir, Table, parallelize = false))(SparkDialect))
   }
 
   def duckSql(): String = sql(Table)(DuckDialect)

@@ -161,14 +161,12 @@ object FreqProfiler {
     * metadata-sized (one row per A-column), so it is materialized and
     * reused by every downstream consumer. */
   def profile(spark: SparkSession, dir: String, table: String): DataFrame =
-    graft.core.SessionCache.getOrElseUpdate(spark, "freq", (dir, table))(
-      compute(spark, dir, table))
+    spark.table(graft.core.Materialize.view(spark, "freq", (dir, table),
+      graft.core.Materialize.Local())(compute(spark, dir, table)))
 
   private def compute(spark: SparkSession, dir: String, table: String): DataFrame = {
-    val df = graft.core.Tables.load(spark, dir, table)
-    val cols = aCols(df.schema)
-    val view = s"__graft_freq_$table"
-    df.createOrReplaceTempView(view)
+    val view = graft.core.Tables.view(spark, dir, table)
+    val cols = aCols(spark.table(view).schema)
     require(cols.nonEmpty, s"no A-columns in $table")
     // Stage 1: eligibility from the (memoized) primary profile.
     val stats = Profiler.profile(spark, dir, table).collect()
@@ -181,7 +179,6 @@ object FreqProfiler {
       stat(c, "distinct_value_ct") <= 70 && stat(c, "max_length") <= 70)
     val patCols = cols.filter(c => stat(c, "max_length") >= 3 && stat(c, "max_length") <= 25)
     // Stage 2: fused frequency/pattern job over eligible columns only.
-    val out = spark.sql(sparkSql(view, freqCols, patCols, cols))
-    spark.createDataFrame(java.util.Arrays.asList(out.collect(): _*), out.schema)
+    spark.sql(sparkSql(view, freqCols, patCols, cols))
   }
 }

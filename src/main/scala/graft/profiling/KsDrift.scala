@@ -187,18 +187,17 @@ object KsDrift {
     // and phase 1 re-derives its ~10² bucket totals from the corpus
     // directly (map-side combined on the scan) — cheaper than
     // materializing the 10⁵-row census checkpoint both phases read.
-    graft.core.Tables.load(spark, dir, "lineitem", parallelize = false)
-      .createOrReplaceTempView("__graft_ks_li")
+    val lineitem = graft.core.Tables.view(spark, dir, "lineitem", parallelize = false)
     // phase 1: bucket totals (metadata-sized), folded to prefix
     // offsets + the grand totals driver-side
-    val btot = spark.sql(bucketTotalsCorpusSql("__graft_ks_li")).collect()
+    val btot = spark.sql(bucketTotalsCorpusSql(lineitem)).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       .sortBy(_._1)
     var (ra, rb) = (0L, 0L)
     val offs = btot.map { case (bkt, ta, tb) =>
       val o = (bkt, ra, rb); ra += ta; rb += tb; o
     }
-    spark.sql(sparkCorpusSql("__graft_ks_li",
+    spark.sql(sparkCorpusSql(lineitem,
       offs.map(o => o._1 -> o._2).toMap,
       offs.map(o => o._1 -> o._3).toMap, ra, rb))
   }

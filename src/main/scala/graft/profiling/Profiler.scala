@@ -103,20 +103,18 @@ object Profiler {
               mode: String = "exact"): DataFrame =
     if (mode == "approx")
       ApproxProfiler.profile(spark, dir, table)
-    else graft.core.SessionCache.getOrElseUpdate(
-      spark, "profiler", (dir, table, sampleFraction))(
-      compute(spark, dir, table, sampleFraction))
+    else spark.table(graft.core.Materialize.view(
+      spark, "profile", (dir, table, sampleFraction))(
+      compute(spark, dir, table, sampleFraction)))
 
   private def compute(spark: SparkSession, dir: String, table: String,
                       sampleFraction: Option[Double]): DataFrame = {
     val d: Dialect = SparkDialect
-    val df0 = graft.core.Tables.load(spark, dir, table)
-    val df = sampleFraction.fold(df0)(f => df0.sample(withReplacement = false, f, seed = 64L))
-    // fraction in the view name: a sampled and an unsampled profile of
-    // the same table may run concurrently and must not share a view
-    val view = s"__graft_profile_$table" +
-      sampleFraction.fold("")(f => s"_s${(f * 1e6).toLong}")
-    df.createOrReplaceTempView(view)
+    val view = sampleFraction.fold(graft.core.Tables.view(spark, dir, table)) { f =>
+      graft.core.Materialize.view(spark, "profile_sample", (dir, table, f))(
+        graft.core.Tables.load(spark, dir, table).sample(withReplacement = false, f, seed = 64L))
+    }
+    val df = spark.table(view)
 
     val perCol: Seq[(StructField, Int, Seq[MetricEntry])] =
       df.schema.fields.toSeq.zipWithIndex.map { case (f, i) =>

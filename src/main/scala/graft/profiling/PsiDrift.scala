@@ -64,9 +64,8 @@ object PsiDrift {
        | ORDER BY bucket""".stripMargin
 
   def run(spark: SparkSession, dir: String): DataFrame = {
-    graft.core.Tables.load(spark, dir, "lineitem", parallelize = false)
-      .createOrReplaceTempView("__graft_psi_li")
-    spark.sql(sql("__graft_psi_li")(SparkDialect))
+    val lineitem = graft.core.Tables.view(spark, dir, "lineitem", parallelize = false)
+    spark.sql(sql(lineitem)(SparkDialect))
   }
 
   def duckSql(): String = sql("lineitem")(DuckDialect)

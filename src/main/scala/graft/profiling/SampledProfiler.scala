@@ -132,13 +132,6 @@ object SampledProfiler {
   private val lineitemKey =
     "CAST(l_orderkey AS STRING) || ':' || CAST(l_linenumber AS STRING)"
 
-  /** The materialized sample's view name, dir-unique: the memo key is
-    * per (session, dir), and a fixed name would be silently rebound by
-    * a later dir's materialization while the first dir's cache entry
-    * still pointed at it. */
-  def sampledViewName(dir: String): String =
-    "__graft_sampled_li_draw_" + java.lang.Integer.toHexString(dir.hashCode)
-
   /** The landed sampled profile — the engine's `profile_results` row set
     * for this (session, dir), mirroring the reference's landing of every
     * profiling run (run_profiling.py writes profile_results; consumers
@@ -151,33 +144,40 @@ object SampledProfiler {
     * neighboring entries), not from the data — landing the run removes
     * the re-pay entirely; SamplingSpec pins repeat reads to ≤1 job. */
   def run(spark: SparkSession, dir: String): DataFrame = {
-    val v = graft.core.SessionCache.getOrElseUpdate(spark, "sampledprofile", dir) {
-      val name = "__graft_sampled_profile_" +
-        java.lang.Integer.toHexString(dir.hashCode)
-      compute(spark, dir).localCheckpoint(eager = true)
-        .createOrReplaceTempView(name)
-      name
-    }
+    val v = graft.core.Materialize.view(spark, "sampled_profile", dir,
+      graft.core.Materialize.Checkpoint)(compute(spark, dir))
     spark.sql(s"SELECT * FROM $v ORDER BY column_name")
   }
 
+  /** lineitem's row count, memoized per (session, dir) like every other
+    * shared value — repeated profiling passes re-derive neither it nor
+    * the sample. */
+  private def rowCount(spark: SparkSession, dir: String): Long =
+    graft.core.SessionCache.getOrElseUpdate(spark, "rowcount", (dir, "lineitem"))(
+      graft.core.Tables.load(spark, dir, "lineitem").count())
+
+  /** The materialized Bernoulli sample of lineitem, landed once per
+    * (session, dir). */
+  private[graft] def sampledView(spark: SparkSession, dir: String): String =
+    graft.core.Materialize.view(spark, "sampled_li", dir, graft.core.Materialize.Checkpoint) {
+      val n = rowCount(spark, dir)
+      val sampleCount = samplingParams(n).map(_.sampleCount).getOrElse(n)
+      val draw = SparkDialect.hexToLong(s"SUBSTRING(MD5($lineitemKey), 1, 8)")
+      spark.sql(
+        s"""SELECT * FROM ${graft.core.Tables.view(spark, dir, "lineitem")}
+           | WHERE CAST($draw AS DOUBLE) / 4294967296.0
+           |       < CAST($sampleCount AS DOUBLE) / $n""".stripMargin)
+    }
+
   private def compute(spark: SparkSession, dir: String): DataFrame = {
     val d: Dialect = SparkDialect
-    val df = graft.core.Tables.load(spark, dir, "lineitem")
-    val view = "__graft_sampled_li"
-    df.createOrReplaceTempView(view)
-    val schema = df.schema
-    // sampling params computed driver-side (reference: profiling_query.py:22-53);
-    // the count and the materialized sample below memoize per (session,
-    // dir) like every other shared relation — repeated profiling passes
-    // over one corpus re-derive neither
-    val n = graft.core.SessionCache.getOrElseUpdate(
-      spark, "rowcount", (dir, "lineitem"))(df.count())
+    val schema = graft.core.Tables.load(spark, dir, "lineitem").schema
+    // sampling params computed driver-side (reference: profiling_query.py:22-53)
+    val n = rowCount(spark, dir)
     val sampleCount = samplingParams(n).map(_.sampleCount).getOrElse(n)
     // identical arithmetic to the oracle's in-SQL params: integer literals
     // into the same double expressions, so estimates hash-match exactly
     val ratioExpr = s"(CAST($n AS DOUBLE) / $sampleCount)"
-    val draw = d.hexToLong(s"SUBSTRING(MD5($lineitemKey), 1, 8)")
     val cols = metricsOf(schema)
     // The sample is MATERIALIZED ONCE per entry (localCheckpoint), then
     // every downstream job reads the checkpointed partitions: the
@@ -192,17 +192,7 @@ object SampledProfiler {
     // routed through ONE stack-unpivot group-by job — never an inline
     // COUNT(DISTINCT) per chunk, which would plan a multi-distinct
     // Expand over the sampled scan per chunk.
-    val sampledView = graft.core.SessionCache.getOrElseUpdate(
-      spark, "sampledview", (dir, "lineitem")) {
-      val v = sampledViewName(dir)
-      spark.sql(
-        s"""SELECT * FROM $view
-           | WHERE CAST($draw AS DOUBLE) / 4294967296.0
-           |       < CAST($sampleCount AS DOUBLE) / $n""".stripMargin)
-        .localCheckpoint(eager = true)
-        .createOrReplaceTempView(v)
-      v
-    }
+    val sampled = sampledView(spark, dir)
 
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
@@ -223,7 +213,7 @@ object SampledProfiler {
         Future {
           val row = spark.sql(
             s"""SELECT ${sel.mkString(",\n  ")}
-               |  FROM $sampledView""".stripMargin).collect()(0)
+               |  FROM $sampled""".stripMargin).collect()(0)
           row.schema.fieldNames.zipWithIndex
             .map { case (nm, j) => nm -> row.get(j) }.toMap
         }
@@ -258,7 +248,7 @@ object SampledProfiler {
           s"""SELECT kid, COUNT(*) AS ct FROM (
              |  SELECT kid, sv, nv, iv FROM (
              |    SELECT stack(${stackArgs.length}, ${stackArgs.mkString(",\n      ")})
-             |           AS (kid, sv, nv, iv) FROM $sampledView
+             |           AS (kid, sv, nv, iv) FROM $sampled
              |  ) WHERE sv IS NOT NULL OR nv IS NOT NULL OR iv IS NOT NULL
              |  GROUP BY kid, sv, nv, iv
              |) GROUP BY kid""".stripMargin).collect()
@@ -286,14 +276,14 @@ object SampledProfiler {
       }
     }
     val aggRow = org.apache.spark.sql.Row.fromSeq(aggVals)
-    val aggView = "__graft_sampled_agg"
-    spark.createDataFrame(java.util.Arrays.asList(aggRow), aggSchema)
-      .createOrReplaceTempView(aggView)
-    val selects = cols.map { case (f, i, ms) =>
-      branch(f, i, ms, ratioExpr, aggView, name => s"c${i}_$name")
+    graft.core.Materialize.sql(spark,
+      spark.createDataFrame(java.util.Arrays.asList(aggRow), aggSchema)) { case Seq(agg) =>
+      val selects = cols.map { case (f, i, ms) =>
+        branch(f, i, ms, ratioExpr, agg, name => s"c${i}_$name")
+      }
+      s"""${selects.mkString("\nUNION ALL\n")}
+         |ORDER BY column_name""".stripMargin
     }
-    spark.sql(s"""${selects.mkString("\nUNION ALL\n")}
-                 |ORDER BY column_name""".stripMargin)
   }
 
   def duckSql(): String = {

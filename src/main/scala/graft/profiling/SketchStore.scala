@@ -40,11 +40,8 @@ object SketchStore {
   /** Land the per-source word sketches (memoized per session+dir):
     * one word-explode scan, |sources| binary rows. */
   private[graft] def sketchRel(spark: SparkSession, dir: String): String =
-    graft.core.SessionCache.getOrElseUpdate(spark, "sketch_store", dir) {
-      val docs = "__graft_sketch_docs"
-      graft.core.Tables.load(spark, dir, "documents")
-        .createOrReplaceTempView(docs)
-      val v = s"__graft_sketch_store_${dir.hashCode.toHexString}"
+    graft.core.Materialize.view(spark, "sketch_store", dir, graft.core.Materialize.Checkpoint) {
+      val docs = docsView(spark, dir)
       spark.sql(
         s"""SELECT source, hll_sketch_agg(word, $LgK) AS sk, COUNT(*) AS word_rows
            |  FROM (SELECT t.source, w.word
@@ -52,9 +49,11 @@ object SketchStore {
            |          JOIN (${SparkDialect.wordsRel(docs, "doc_id", "text")}) w
            |            ON w.id = t.doc_id) x
            | GROUP BY source""".stripMargin)
-        .localCheckpoint(eager = true).createOrReplaceTempView(v)
-      v
     }
+
+  /** The documents relation the sketches and the exact counts read. */
+  private[graft] def docsView(spark: SparkSession, dir: String): String =
+    graft.core.Tables.view(spark, dir, "documents")
 
   /** Global-estimate frame over the LANDED registers only (exposed for
     * the no-rescan plan tripwire). */
@@ -71,9 +70,7 @@ object SketchStore {
     * verdict needs (the oracle's side of the bargain), never per scope. */
   def run(spark: SparkSession, dir: String): DataFrame = {
     val rel = sketchRel(spark, dir)
-    val docs = "__graft_sketch_docs"
-    graft.core.Tables.load(spark, dir, "documents")
-      .createOrReplaceTempView(docs)
+    val docs = docsView(spark, dir)
     spark.sql(
       s"""WITH exact AS (
          |  SELECT t.source, COUNT(DISTINCT w.word) AS exact_distinct

@@ -573,20 +573,19 @@ object Scoring {
   /** CAT results across every suite table, memoized per (session, dir) —
     * shared by prevalence, score cards and the issues drill-down. */
   private[graft] def catResultsView(spark: SparkSession, dir: String): String =
-    graft.core.SessionCache.getOrElseUpdate(spark, "catres_view", dir) {
+    // materialized (see prevalenceView): every consumer of the bare view
+    // re-executed the 4-suite union plan; the result is one row per CAT
+    // test — LocalRelation-sized, ENFORCED by the capped collect (falls
+    // back to a distributed checkpoint past the cap).
+    graft.core.Materialize.view(spark, "catres", dir, graft.core.Materialize.Local()) {
       import scala.concurrent.{Await, Future}
       import scala.concurrent.duration.Duration
       implicit val ec: scala.concurrent.ExecutionContext = graft.core.Pools.actions
-      val cat = Await.result(
+      Await.result(
         Future.sequence(CatSuite.suites.keys.toSeq.sorted.map(t =>
           Future(CatSuite.run(spark, dir, t).withColumn("table_name", lit(t))))),
         Duration.Inf)
         .reduce(_ unionByName _)
-      // materialized (see prevalenceView): every consumer of the bare
-      // view re-executed the 4-suite union plan; the result is one row
-      // per CAT test — LocalRelation-sized, ENFORCED by the capped
-      // collect (falls back to a distributed checkpoint past the cap).
-      graft.core.Materialize.localView(spark, cat, "__graft_catres_shared")
     }
 
   private[graft] def duckCatRel(): String =
@@ -633,11 +632,10 @@ object Scoring {
   /** QUERY-test result rows across the suite, memoized per (session,
     * dir) — ten metadata-sized rows held locally. */
   private def queryResultsView(spark: SparkSession, dir: String): String =
-    graft.core.SessionCache.getOrElseUpdate(spark, "qres_view", dir) {
-      val res = graft.querytests.QueryTests.tests
+    graft.core.Materialize.view(spark, "qres", dir, graft.core.Materialize.Local()) {
+      graft.querytests.QueryTests.tests
         .map(t => graft.querytests.QueryTests.run(spark, dir, t.name))
         .reduce(_ unionByName _)
-      graft.core.Materialize.localView(spark, res, "__graft_qres_shared")
     }
 
   def runQueryPrevalence(spark: SparkSession, dir: String): DataFrame =
@@ -799,7 +797,7 @@ object Scoring {
     Seq(("Non_Standard_Blanks", "events", "event_type"))
 
   private def prevalenceView(spark: SparkSession, dir: String): String =
-    graft.core.SessionCache.getOrElseUpdate(spark, "prevalence_view", dir) {
+    graft.core.Materialize.view(spark, "prevalence", dir, graft.core.Materialize.Local()) {
       // materialized like its siblings (enrichedView / anomaliesView /
       // queryResultsView): a bare temp view re-executes the full
       // prevalence plan in EVERY consumer (Spark inlines views), and
@@ -808,8 +806,7 @@ object Scoring {
       // per failed test per column), so it lands as a LocalRelation —
       // ENFORCED by the capped collect (distributed-checkpoint fallback
       // past the cap).
-      val res = runTestPrevalence(spark, dir)
-      graft.core.Materialize.localView(spark, res, "__graft_prev_shared")
+      runTestPrevalence(spark, dir)
     }
 
   def runScoreCardColumns(spark: SparkSession, dir: String): DataFrame = {
@@ -905,12 +902,9 @@ object Scoring {
   def landScoreDetail(spark: SparkSession, dir: String, root: String,
                       runId: String): String = {
     val enrView = enrichedView(spark, dir)
-    spark.sql(scoreDetailSql(enrView,
+    graft.core.RunStore.land(spark.sql(scoreDetailSql(enrView,
       HygieneScreens.anomaliesView(spark, dir),
-      prevalenceView(spark, dir))(SparkDialect))
-      .createOrReplaceTempView("__graft_sd_land")
-    graft.core.RunStore.land(spark.table("__graft_sd_land"), root, runId,
-      "score_detail")
+      prevalenceView(spark, dir))(SparkDialect)), root, runId, "score_detail")
   }
 
   /** Overall + CDE score trend over ALL landed score_detail runs under
@@ -958,9 +952,9 @@ object Scoring {
 
   def runScoreCard(spark: SparkSession, dir: String): DataFrame = {
     val enrView = enrichedView(spark, dir)
-    runTestPrevalence(spark, dir).createOrReplaceTempView("__graft_sc_prev")
-    spark.sql(scoreCardSql(enrView, HygieneScreens.anomaliesView(spark, dir),
-      "__graft_sc_prev")(SparkDialect))
+    graft.core.Materialize.sql(spark, runTestPrevalence(spark, dir)) { case Seq(prev) =>
+      scoreCardSql(enrView, HygieneScreens.anomaliesView(spark, dir), prev)(SparkDialect)
+    }
   }
 
   def duckScoreCardSql(): String = {

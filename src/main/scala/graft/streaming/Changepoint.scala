@@ -37,9 +37,7 @@ object Changepoint {
        | ORDER BY day""".stripMargin
 
   def run(spark: SparkSession, dir: String): DataFrame = {
-    graft.core.Tables.load(spark, dir, "events", parallelize = false)
-      .createOrReplaceTempView("__graft_chg_events")
-    spark.sql(sql("__graft_chg_events"))
+    spark.sql(sql(graft.core.Tables.view(spark, dir, "events", parallelize = false)))
   }
 
   def duckSql(): String = sql("events")

@@ -71,9 +71,8 @@ object EventAnalytics {
     // shuffle-first plan: the per-user window re-keys every row anyway,
     // so the load-time rebalance exchange would be a second full
     // shuffle of the raw rows for nothing
-    graft.core.Tables.load(spark, dir, "events", parallelize = false)
-      .createOrReplaceTempView("__graft_funnel_events")
-    spark.sql(funnelSql("__graft_funnel_events")(SparkDialect))
+    val events = graft.core.Tables.view(spark, dir, "events", parallelize = false)
+    spark.sql(funnelSql(events)(SparkDialect))
   }
 
   def duckFunnelSql(): String = funnelSql("events")(DuckDialect)
@@ -102,9 +101,8 @@ object EventAnalytics {
        | ORDER BY c.cohort, c.week_n""".stripMargin
 
   def runRetention(spark: SparkSession, dir: String): DataFrame = {
-    graft.core.Tables.load(spark, dir, "events", parallelize = false)
-      .createOrReplaceTempView("__graft_ret_events")
-    spark.sql(retentionSql("__graft_ret_events")(SparkDialect))
+    val events = graft.core.Tables.view(spark, dir, "events", parallelize = false)
+    spark.sql(retentionSql(events)(SparkDialect))
   }
 
   def duckRetentionSql(): String = retentionSql("events")(DuckDialect)
@@ -147,9 +145,8 @@ object EventAnalytics {
        | ORDER BY a.user_id""".stripMargin
 
   def runPattern(spark: SparkSession, dir: String): DataFrame = {
-    graft.core.Tables.load(spark, dir, "events", parallelize = false)
-      .createOrReplaceTempView("__graft_pat_events")
-    spark.sql(patternSql("__graft_pat_events")(SparkDialect))
+    val events = graft.core.Tables.view(spark, dir, "events", parallelize = false)
+    spark.sql(patternSql(events)(SparkDialect))
   }
 
   def duckPatternSql(): String = patternSql("events")(DuckDialect)
@@ -193,9 +190,8 @@ object EventAnalytics {
   val AnomalyZ = 3.0
 
   def runRateAnomaly(spark: SparkSession, dir: String): DataFrame = {
-    graft.core.Tables.load(spark, dir, "events", parallelize = false)
-      .createOrReplaceTempView("__graft_rate_events")
-    spark.sql(rateAnomalySql("__graft_rate_events")(SparkDialect))
+    val events = graft.core.Tables.view(spark, dir, "events", parallelize = false)
+    spark.sql(rateAnomalySql(events)(SparkDialect))
   }
 
   def duckRateAnomalySql(): String = rateAnomalySql("events")(DuckDialect)
@@ -234,9 +230,8 @@ object EventAnalytics {
   val LookupRows = 20
 
   def runLookupRateAnomaly(spark: SparkSession, dir: String): DataFrame = {
-    graft.core.Tables.load(spark, dir, "events", parallelize = false)
-      .createOrReplaceTempView("__graft_rate_events")
-    spark.sql(lookupRateAnomalySql("__graft_rate_events")(SparkDialect))
+    val events = graft.core.Tables.view(spark, dir, "events", parallelize = false)
+    spark.sql(lookupRateAnomalySql(events)(SparkDialect))
   }
 
   def duckLookupRateAnomalySql(): String =
@@ -274,9 +269,7 @@ object EventAnalytics {
        | ORDER BY event_type""".stripMargin
 
   def runPropsStats(spark: SparkSession, dir: String): DataFrame = {
-    graft.core.Tables.load(spark, dir, "events")
-      .createOrReplaceTempView("__graft_props_events")
-    spark.sql(propsStatsSql("__graft_props_events")(SparkDialect))
+    spark.sql(propsStatsSql(graft.core.Tables.view(spark, dir, "events"))(SparkDialect))
   }
 
   def duckPropsStatsSql(): String = propsStatsSql("events")(DuckDialect)
@@ -495,9 +488,7 @@ object EventAnalytics {
        |          FROM cand WHERE rn = 1) z""".stripMargin
 
   def runAttribution(spark: SparkSession, dir: String): DataFrame = {
-    graft.core.Tables.load(spark, dir, "events", parallelize = false)
-      .createOrReplaceTempView("__graft_attr_events")
-    spark.sql(attributionSql("__graft_attr_events"))
+    spark.sql(attributionSql(graft.core.Tables.view(spark, dir, "events", parallelize = false)))
   }
 
   /** All in-window (purchase, click) candidate pairs — the relation the
@@ -553,9 +544,8 @@ object EventAnalytics {
        | ORDER BY r.purchase_id, touch_rank""".stripMargin
 
   def runMultiTouch(spark: SparkSession, dir: String): DataFrame = {
-    graft.core.Tables.load(spark, dir, "events", parallelize = false)
-      .createOrReplaceTempView("__graft_attr_events")
-    spark.sql(multiTouchSql("__graft_attr_events")(SparkDialect))
+    val events = graft.core.Tables.view(spark, dir, "events", parallelize = false)
+    spark.sql(multiTouchSql(events)(SparkDialect))
   }
 
   def duckMultiTouchSql(): String = multiTouchSql("events")(DuckDialect)

@@ -192,8 +192,8 @@ object Monitors {
   }
 
   def runTrendForecast(spark: SparkSession, dir: String): DataFrame = {
-    graft.core.Tables.load(spark, dir, "events", parallelize = false).createOrReplaceTempView("__graft_events")
-    spark.sql(trendForecastSql("__graft_events")(SparkDialect))
+    val events = graft.core.Tables.view(spark, dir, "events", parallelize = false)
+    spark.sql(trendForecastSql(events)(SparkDialect))
   }
 
   def runFreshnessGaps(spark: SparkSession, dir: String): DataFrame = {
@@ -202,8 +202,8 @@ object Monitors {
   }
 
   def runMetricTrend(spark: SparkSession, dir: String): DataFrame = {
-    graft.core.Tables.load(spark, dir, "events", parallelize = false).createOrReplaceTempView("__graft_events")
-    spark.sql(metricTrendSql("__graft_events")(SparkDialect))
+    val events = graft.core.Tables.view(spark, dir, "events", parallelize = false)
+    spark.sql(metricTrendSql(events)(SparkDialect))
   }
 
   def duckTrendForecastSql(): String = trendForecastSql("events")(DuckDialect)
@@ -211,8 +211,8 @@ object Monitors {
   def duckFreshnessGapsSql(): String = freshnessGapsSql(DuckDialect)
 
   def runVolumeBands(spark: SparkSession, dir: String): DataFrame = {
-    graft.core.Tables.load(spark, dir, "events", parallelize = false).createOrReplaceTempView("__graft_events")
-    spark.sql(volumeBandsSql("__graft_events")(SparkDialect))
+    val events = graft.core.Tables.view(spark, dir, "events", parallelize = false)
+    spark.sql(volumeBandsSql(events)(SparkDialect))
   }
 
   def runFreshness(spark: SparkSession, dir: String): DataFrame = {
@@ -287,10 +287,9 @@ object Monitors {
     * exercise genuine multi-run histories in one process. */
   def landSignals(spark: SparkSession, dir: String, root: String,
                   runId: String, cutoffDays: Option[Int] = None): String = {
-    graft.core.Tables.load(spark, dir, "events", parallelize = false)
-      .createOrReplaceTempView("__graft_events_sig")
+    val events = graft.core.Tables.view(spark, dir, "events", parallelize = false)
     graft.core.RunStore.land(
-      spark.sql(signalsSql("__graft_events_sig", runId, cutoffDays)(SparkDialect)),
+      spark.sql(signalsSql(events, runId, cutoffDays)(SparkDialect)),
       root, runId, "monitor_signals")
   }
 
@@ -311,13 +310,12 @@ object Monitors {
     * oracle reads the same files and recomputes the identical recalc. */
   def runHistoryThresholds(spark: SparkSession, dir: String): DataFrame = {
     val root = graft.core.RunStore.root
-    graft.core.Tables.load(spark, dir, "events", parallelize = false)
-      .createOrReplaceTempView("__graft_events_sig")
+    val events = graft.core.Tables.view(spark, dir, "events", parallelize = false)
     val p0 = graft.core.RunStore.land(
-      spark.sql(signalsSql("__graft_events_sig", "run_000", Some(7))(SparkDialect)),
+      spark.sql(signalsSql(events, "run_000", Some(7))(SparkDialect)),
       root, "run_000", "monitor_signals")
     val p1 = graft.core.RunStore.land(
-      spark.sql(signalsSql("__graft_events_sig", "run_001", None)(SparkDialect)),
+      spark.sql(signalsSql(events, "run_001", None)(SparkDialect)),
       root, "run_001", "monitor_signals")
     spark.sql(historyThresholdsSql(Seq(p0, p1))(SparkDialect))
   }
@@ -628,10 +626,9 @@ object Monitors {
     * RunHistorySpec drives the genuine multi-run landing path). */
   def runPredictThresholds(spark: SparkSession, dir: String): DataFrame = {
     val root = graft.core.RunStore.root
-    graft.core.Tables.load(spark, dir, "events", parallelize = false)
-      .createOrReplaceTempView("__graft_events_bf")
+    val events = graft.core.Tables.view(spark, dir, "events", parallelize = false)
     val p = graft.core.RunStore.land(
-      spark.sql(signalBackfillSql("__graft_events_bf", 40)(SparkDialect)),
+      spark.sql(signalBackfillSql(events, 40)(SparkDialect)),
       root, "run_000", "monitor_signal_backfill")
     predictThresholdsFrom(spark, Seq(p))
   }
@@ -650,14 +647,12 @@ object Monitors {
                  holidayCodes: Seq[String] = Seq("US"),
                  tzOffsetsSec: Map[String, Long] = Map.empty): DataFrame = {
     import spark.implicits._
-    val events = graft.core.Tables.load(spark, dir, "events", parallelize = false)
-    events.createOrReplaceTempView("__graft_events_sx")
     val daily = spark.sql(
-      """SELECT event_type AS series,
-        |       CAST(unix_timestamp(CAST(date_trunc('day', ts) AS TIMESTAMP)) AS BIGINT) AS ts,
-        |       CAST(COUNT(*) AS DOUBLE) AS value
-        |  FROM __graft_events_sx
-        | GROUP BY 1, 2""".stripMargin).as[SeriesPoint]
+      s"""SELECT event_type AS series,
+         |       CAST(unix_timestamp(CAST(date_trunc('day', ts) AS TIMESTAMP)) AS BIGINT) AS ts,
+         |       CAST(COUNT(*) AS DOUBLE) AS value
+         |  FROM ${graft.core.Tables.view(spark, dir, "events", parallelize = false)}
+         | GROUP BY 1, 2""".stripMargin).as[SeriesPoint]
     val sens = sensitivity
     val codes = holidayCodes
     val tzs = tzOffsetsSec

@@ -60,9 +60,7 @@ object Sessions {
   }
 
   def run(spark: SparkSession, dir: String): DataFrame = {
-    graft.core.Tables.load(spark, dir, "events", parallelize = false)
-      .createOrReplaceTempView("__graft_sess_events")
-    spark.sql(sql("__graft_sess_events")(SparkDialect))
+    spark.sql(sql(graft.core.Tables.view(spark, dir, "events", parallelize = false))(SparkDialect))
   }
 
   def duckSql(): String = sql("events")(DuckDialect)

@@ -176,12 +176,9 @@ object StreamMonitors {
     * per-row expressions, so the stream needs no watermark or state
     * and emits one metrics row per arriving document. */
   def textQuality(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val spark = docs.sparkSession
-    val n = graft.core.SessionCache.counter(spark, "streamtq").incrementAndGet()
-    val v = s"__graft_stream_tq_$n"
-    docs.createOrReplaceTempView(v)
-    spark.sql(graft.pipeline.TextAnalysis.sql(v, ordered = false)(
-      graft.oracle.SparkDialect))
+    graft.core.Materialize.sql(docs.sparkSession, docs) { case Seq(v) =>
+      graft.pipeline.TextAnalysis.sql(v, ordered = false)(graft.oracle.SparkDialect)
+    }
   }
 
   /** Filter-on-ingest: the streaming form of the composite quality gate
@@ -207,11 +204,10 @@ object StreamMonitors {
     import org.apache.spark.sql.functions.{arrays_overlap, coalesce, col, expr, lit, typedLit, when}
     val spark = docs.sparkSession
     graft.functions.WinnowFpsExpr.register(spark)
-    val n = graft.core.SessionCache.counter(spark, "streamgate").incrementAndGet()
-    val v = s"__graft_stream_gate_$n"
-    docs.createOrReplaceTempView(v)
-    val metrics = spark.sql(graft.pipeline.TextAnalysis.sql(
-      v, extraCols = Seq("text"), ordered = false)(graft.oracle.SparkDialect))
+    val metrics = graft.core.Materialize.sql(spark, docs) { case Seq(v) =>
+      graft.pipeline.TextAnalysis.sql(v, extraCols = Seq("text"), ordered = false)(
+        graft.oracle.SparkDialect)
+    }
     // COALESCE to 0 mirrors the batch gate: a null-text doc IS too short
     val flagged = metrics
       .withColumn("too_short",

@@ -658,8 +658,9 @@ class SampledLookupSpec extends SparkSpec {
     // and the sample is drawn from the same failing set: every sampled
     // value is a genuine duplicate group
     val failing = spark.sql(
-      """SELECT o_custkey FROM __dd_orders
-        | GROUP BY o_custkey HAVING COUNT(*) > 1""".stripMargin)
+      s"""SELECT o_custkey
+         |  FROM ${graft.core.Tables.view(spark, dir01, "orders", parallelize = false)}
+         | GROUP BY o_custkey HAVING COUNT(*) > 1""".stripMargin)
       .collect().map(_.getLong(0)).toSet
     assert(sampled.subsetOf(failing))
   }

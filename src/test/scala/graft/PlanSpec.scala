@@ -187,7 +187,7 @@ class PlanSpec extends SparkSpec {
   test("sampled profile materializes the sample once, jobs read the checkpoint") {
     graft.profiling.SampledProfiler.run(spark, dir).count()
     val p = plan(spark.table(
-      graft.profiling.SampledProfiler.sampledViewName(dir)))
+      graft.profiling.SampledProfiler.sampledView(spark, dir)))
     assert(!p.contains("FileScan"),
       "downstream jobs still re-derive the sample from the raw scan")
     assert(p.contains("ExistingRDD") || p.contains("LogicalRDD"),
@@ -274,8 +274,7 @@ class PlanSpec extends SparkSpec {
       assert(pf.contains("bucket"),
         s"bucket probe is not partition-pruned:\n${p.take(800)}")
       // pruned read returns exactly the bucket's rows
-      val expected = spark.table("__graft_ann_base_" +
-        java.lang.Integer.toHexString(dir.hashCode))
+      val expected = spark.table(graft.pipeline.Similarity.annBaseView(spark, dir))
         .where("bucket = 3").count()
       assert(df.count() == expected,
         s"pruned probe returned ${df.count()} rows, expected $expected")
@@ -345,7 +344,7 @@ class PlanSpec extends SparkSpec {
     // the feature-count side relations are bounded at Buckets rows by
     // construction — the scored computation must join them broadcast
     val scoredPlan = plan(spark.sql(graft.pipeline.Selection
-      .dsirScoredSql("__graft_dsir_docs")(graft.oracle.SparkDialect)))
+      .dsirScoredSql(graft.core.Tables.view(spark, dir, "documents"))(graft.oracle.SparkDialect)))
     assert(scoredPlan.contains("BroadcastHashJoin"),
       s"expected broadcast joins against the count tables:\n${scoredPlan.take(600)}")
     // selection is cutoff-based: the final plan must carry NO window —
@@ -357,8 +356,8 @@ class PlanSpec extends SparkSpec {
     // the cutoff election over it must plan TakeOrderedAndProject
     // (per-partition top-K + driver merge), never a global sort
     val cutPlan = plan(spark.sql(
-      """SELECT dsir_score, doc_id FROM __graft_dsir_scored
-        | ORDER BY dsir_score DESC, doc_id LIMIT 100""".stripMargin))
+      s"""SELECT dsir_score, doc_id FROM ${graft.pipeline.Selection.scoredView(spark, dir)}
+         | ORDER BY dsir_score DESC, doc_id LIMIT 100""".stripMargin))
     assert(cutPlan.contains("TakeOrderedAndProject"),
       s"cutoff election is not a top-K:\n${cutPlan.take(600)}")
   }

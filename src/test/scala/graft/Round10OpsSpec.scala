@@ -378,8 +378,7 @@ class Round10OpsSpec extends SparkSpec {
     // the landed filter relation is bounded by Words rows and every
     // word uses only the 60 sign-safe bits
     val words = spark.sql(
-      s"SELECT COUNT(*) c, MIN(w) mn FROM __graft_bloom_words_" +
-        java.lang.Integer.toHexString(sfDir.hashCode)).head()
+      s"SELECT COUNT(*) c, MIN(w) mn FROM ${BloomDecontam.filterView(spark, sfDir)}").head()
     assert(words.getLong(0) <= BloomDecontam.Words)
     assert(words.getLong(1) >= 0L, "no word may set the sign bits")
   }

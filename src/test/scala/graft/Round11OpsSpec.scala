@@ -284,7 +284,7 @@ class Round11OpsSpec extends SparkSpec {
       "landed store must hold exactly one register row per source")
     val merged = SketchStore.globalEstimateFrame(spark, sfDir)
       .head().getLong(0)
-    val docs = "__graft_sketch_docs"
+    val docs = SketchStore.docsView(spark, sfDir)
     val direct = spark.sql(
       s"""SELECT hll_sketch_estimate(hll_sketch_agg(word, ${SketchStore.LgK}))
          |  FROM (${graft.oracle.SparkDialect.wordsRel(docs, "doc_id", "text")}) w""".stripMargin)
