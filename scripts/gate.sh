@@ -10,7 +10,8 @@
 # 2. view owner lint       — createOrReplaceTempView only in core/Materialize.scala
 #                            and Tables.registerAll
 # 3. sbt test              — full suite must compile AND run green
-# 4. graft.Verify          — dump every oracle entry at sf0.01
+# 4. graft.Verify          — dump every oracle entry at sf0.01 (fails on
+#                            Verify's exit: any entry that did not dump)
 # 5. scripts/check.py      — value-compare vs the DuckDB oracle
 # 6. scripts/oracle_types.py — no HUGEINT/DECIMAL leaks in oracle types
 # 7. git status --porcelain  — no untracked/modified round artifacts
@@ -71,7 +72,14 @@ SPARK_GRAFT_CPUS=8 java -Xmx12g \
   --add-opens=java.base/sun.nio.cs=ALL-UNNAMED \
   --add-opens=java.base/sun.security.action=ALL-UNNAMED \
   --add-opens=java.base/sun.util.calendar=ALL-UNNAMED \
-  -cp "$CP" graft.Verify "$SF_DIR" "$OUT_DIR" 2>/dev/null | grep -i fail || true
+  -cp "$CP" graft.Verify "$SF_DIR" "$OUT_DIR" 2>/dev/null > /tmp/gate_verify.txt
+VERIFY_RC=$?
+# the grep only shows the failed entries; Verify's own exit decides
+grep -i fail /tmp/gate_verify.txt || true
+if [ "$VERIFY_RC" -ne 0 ]; then
+  echo "GATE FAIL: graft.Verify exited $VERIFY_RC"; exit 1
+fi
+SUMMARY+="verify: $(tail -1 /tmp/gate_verify.txt)\n"
 
 echo "== gate 5/7: oracle value compare (persists CORRECTNESS_local.json)"
 # --json writes the per-query verdicts in the driver artifact's shape;

@@ -64,12 +64,21 @@ object Materialize {
       body: => DataFrame): String = {
     val name = s"__graft_${ns}_${digest(canonical(key))}"
     val catalog = sessionCatalog(spark)
-    if (catalog.getTempView(name).isEmpty)
-      locks.computeIfAbsent(name, _ => new Object).synchronized {
-        if (catalog.getTempView(name).isEmpty) land(spark, body, form, name)
+    if (catalog.getTempView(name).isEmpty) {
+      val lock = locks.computeIfAbsent(name, _ => new Object)
+      lock.synchronized {
+        // dropped once landed (the view, registered first, is the memo
+        // every later caller checks), so the map holds only landings in
+        // flight; a waiter still on this lock re-checks the catalog
+        try if (catalog.getTempView(name).isEmpty) land(spark, body, form, name)
+        finally locks.remove(name, lock)
       }
+    }
     name
   }
+
+  /** Whether a landing of view `name` holds a lock right now. */
+  private[graft] def lockHeld(name: String): Boolean = locks.containsKey(name)
 
   /** `render` over fresh names for `dfs`, analyzed, with the names
     * dropped again: a one-off statement over derived frames. */
@@ -106,9 +115,9 @@ object Materialize {
   private def sessionCatalog(spark: SparkSession) =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.catalog
 
-  // One lock per view name, so a relation two threads ask for at once
-  // lands once. Nested landings take their dependencies' locks, which
-  // form a DAG, so the locks cannot deadlock.
+  // One lock per view name in flight, so a relation two threads ask for
+  // at once lands once. Nested landings take their dependencies' locks,
+  // which form a DAG, so the locks cannot deadlock.
   private val locks = new ConcurrentHashMap[String, Object]()
   private val fresh = new AtomicLong()
 

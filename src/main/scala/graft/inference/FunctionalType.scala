@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.lit
 
 import graft.core.Tables
-import graft.oracle.{Dialect, DuckDialect, SparkDialect}
+import graft.oracle.{Dialect, DuckDialect}
 import graft.profiling.{FreqProfiler, GeneralType, Profiler}
 
 /** Functional data type inference — a faithful port of the reference's
@@ -514,23 +514,16 @@ object FunctionalType {
     perTable.mkString("(\n", "\nUNION ALL\n", "\n)")
   }
 
-  /** Spark execution: union per-table profile+freq metrics, run cascade.
-    * The cascade's 22 CTE stages cross-reference each other, so Catalyst's
-    * CTE inlining expands the analyzed tree combinatorially — ~3 s of
-    * pure planning per read over a 51-row relation. The inferred result
-    * is itself metadata-sized (one row per column) and every consumer
-    * (generation, runner landing, repeated entry reads) wants the same
-    * rows, so it lands ONCE per (session, dir) and reads are
-    * checkpoint scans — the same discipline as the ANN hit relations. */
-  def infer(spark: SparkSession, dir: String): DataFrame = {
-    val view = graft.core.Materialize.view(spark, "functional", dir,
-        graft.core.Materialize.Checkpoint) {
-      spark.sql(cascadeSql(registerProfileAll(spark, dir))(SparkDialect))
-    }
-    // the landed relation preserves the cascade's output order only
-    // per-partition; re-assert the entry's deterministic order
-    spark.sql(s"SELECT * FROM $view ORDER BY table_name, column_name")
-  }
+  /** Spark execution: the cascade's columns of the enriched profile
+    * ([[HygieneScreens.enrichedView]]), which already ran the same 22
+    * stages over the same profile+freq relation — one cascade plan and
+    * one landing per (session, dir). */
+  def infer(spark: SparkSession, dir: String): DataFrame =
+    spark.sql(
+      s"""SELECT table_name, column_name, general_type, functional_data_type,
+         |       dsug AS datatype_suggestion
+         |  FROM ${HygieneScreens.enrichedView(spark, dir)}
+         | ORDER BY table_name, column_name""".stripMargin)
 
   /** DuckDB oracle: same cascade over the duck-rendered profile+freq. */
   def duckSql(): String = cascadeSql(duckProfileAllRel())(DuckDialect)

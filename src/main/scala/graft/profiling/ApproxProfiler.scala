@@ -10,7 +10,7 @@ import org.apache.spark.sql.types._
   * its distinct job: COUNT(DISTINCT) re-expressed as an unpivot +
   * two-phase group-by still shuffles every distinct value of every
   * profiled column. This profiler replaces each distinct count with a
-  * HyperLogLog++ sketch (`approx_count_distinct`, default 2% rsd) and
+  * HyperLogLog++ sketch (`approx_count_distinct`, 2% rsd) and
   * each exact interpolated percentile with a KLL-style quantile sketch
   * (`approx_percentile`) — both are ordinary partial-mergeable
   * aggregates, so the ENTIRE profile collapses into the scalar job's
@@ -25,69 +25,59 @@ import org.apache.spark.sql.types._
   */
 object ApproxProfiler {
 
-  def profile(spark: SparkSession, dir: String, table: String,
-              rsd: Double = 0.02, pctAccuracy: Int = 10000): DataFrame =
-    spark.table(graft.core.Materialize.view(
-      spark, "approx_profile", (dir, table, rsd, pctAccuracy))(
-      compute(spark, dir, table, rsd, pctAccuracy)))
+  /** HLL++ relative standard deviation of the distinct estimates. */
+  private val Rsd = 0.02
+  /** `approx_percentile` accuracy (relative rank error 1/accuracy). */
+  private val PctAccuracy = 10000
 
-  private def compute(spark: SparkSession, dir: String, table: String,
-                      rsd: Double, pctAccuracy: Int): DataFrame = {
+  def profile(spark: SparkSession, dir: String, table: String): DataFrame =
+    spark.table(graft.core.Materialize.view(spark, "approx_profile", (dir, table))(
+      compute(spark, dir, table)))
+
+  /** One column's sketch entries, all scalar, so [[Profiler.measure]]
+    * runs the whole profile as one statement: exact counts, the HLL++
+    * distinct estimate and, for numerics, min/max and the three quartiles
+    * as one `approx_percentile` array. */
+  private def entries(f: StructField): Seq[ScalarM] = {
+    val c = s"`${f.name}`"
+    val isN = GeneralType.of(f.dataType) == "N"
+    Seq(
+      ScalarM("record_ct", "bigint", true, _ => "COUNT(*)"),
+      ScalarM("value_ct", "bigint", true, _ => s"COUNT($c)"),
+      ScalarM("null_value_ct", "bigint", true,
+        _ => s"CAST(SUM(CASE WHEN $c IS NULL THEN 1 ELSE 0 END) AS BIGINT)"),
+      ScalarM("distinct_value_ct", "bigint", true,
+        _ => s"CAST(approx_count_distinct($c, $Rsd) AS BIGINT)"),
+      ScalarM("min_value", "double", isN, _ => s"CAST(MIN($c) AS DOUBLE)"),
+      ScalarM("max_value", "double", isN, _ => s"CAST(MAX($c) AS DOUBLE)"),
+      ScalarM("quartiles", "array<double>", isN,
+        _ => s"approx_percentile(CAST($c AS DOUBLE), array(0.25, 0.5, 0.75), $PctAccuracy)"))
+  }
+
+  private def compute(spark: SparkSession, dir: String, table: String): DataFrame = {
     val v = graft.core.Tables.view(spark, dir, table)
-    val cols = spark.table(v).schema.fields
-    val sel = cols.zipWithIndex.flatMap { case (f, i) =>
-      val c = s"`${f.name}`"
-      val isN = GeneralType.of(f.dataType) == "N"
-      Seq(
-        s"COUNT($c) AS v_${i}_value_ct",
-        s"CAST(SUM(CASE WHEN $c IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS v_${i}_null_ct",
-        s"CAST(approx_count_distinct($c, $rsd) AS BIGINT) AS v_${i}_distinct") ++
-        (if (isN) Seq(
-          s"CAST(MIN($c) AS DOUBLE) AS v_${i}_min",
-          s"CAST(MAX($c) AS DOUBLE) AS v_${i}_max",
-          s"approx_percentile(CAST($c AS DOUBLE), array(0.25, 0.5, 0.75), $pctAccuracy) AS v_${i}_pct")
-        else Nil)
+    val fields = spark.table(v).schema.fields.toSeq
+    val perCol = fields.map(entries)
+    val vals = Profiler.measure(spark, v, perCol.zipWithIndex.map(_.swap))
+    // every entry but the quartile array is an output column
+    val counted = perCol.head.init
+    val schema = StructType(
+      Seq(StructField("column_name", StringType), StructField("general_type", StringType)) ++
+        counted.map(e => StructField(e.name, ProfileMetrics.sparkType(e.tpe))) ++
+        Seq(25, 50, 75).map(p => StructField(s"percentile_$p", DoubleType)))
+    val rows = fields.zipWithIndex.sortBy(_._1.name).map { case (f, i) =>
+      val q = vals((i, "quartiles")).asInstanceOf[scala.collection.Seq[Any]]
+      Row.fromSeq(Seq(f.name, GeneralType.of(f.dataType)) ++
+        counted.map(e => vals((i, e.name))) ++ Seq.tabulate(3)(k => if (q == null) null else q(k)))
     }
-    val row = spark.sql(
-      s"SELECT COUNT(*) AS record_ct, ${sel.mkString(",\n  ")} FROM $v").head()
-    val recordCt = row.getAs[Long]("record_ct")
-    def opt[T](name: String): Option[T] = {
-      val idx = row.fieldIndex(name)
-      if (row.isNullAt(idx)) None else Some(row.getAs[T](idx))
-    }
-    val schema = StructType(Seq(
-      StructField("column_name", StringType),
-      StructField("general_type", StringType),
-      StructField("record_ct", LongType),
-      StructField("value_ct", LongType),
-      StructField("null_value_ct", LongType),
-      StructField("distinct_value_ct", LongType),
-      StructField("min_value", DoubleType),
-      StructField("max_value", DoubleType),
-      StructField("percentile_25", DoubleType),
-      StructField("percentile_50", DoubleType),
-      StructField("percentile_75", DoubleType)))
-    val rows = cols.zipWithIndex.sortBy(_._1.name).map { case (f, i) =>
-      val isN = GeneralType.of(f.dataType) == "N"
-      val pcts =
-        if (isN) opt[scala.collection.Seq[Double]](s"v_${i}_pct") else None
-      def pct(k: Int): Any = pcts.map(_(k)).orNull
-      Row(f.name, GeneralType.of(f.dataType), recordCt,
-        row.getAs[Long](s"v_${i}_value_ct"),
-        row.getAs[Long](s"v_${i}_null_ct"),
-        row.getAs[Long](s"v_${i}_distinct"),
-        if (isN) opt[Double](s"v_${i}_min").orNull else null,
-        if (isN) opt[Double](s"v_${i}_max").orNull else null,
-        pct(0), pct(1), pct(2))
-    }
-    spark.createDataFrame(rows.toSeq.asJava, schema)
+    spark.createDataFrame(rows.asJava, schema)
   }
 
   /** Approx-vs-exact bounds report — the oracle-checkable face of the
     * sketch profiler: per column, the EXACT distinct count (which both
     * engines compute identically) plus two integer verdicts computed
     * engine-side from the real sketches: the HLL++ distinct estimate
-    * within 10% (5 standard deviations at the 2% rsd default) of exact,
+    * within 10% (5 standard deviations at the 2% rsd) of exact,
     * and the sketched median inside the exact inter-quartile range.
     * The DuckDB oracle asserts the EXPECTED verdicts (all within
     * bounds) — a sketch drifting out of its published error bound flips
@@ -146,17 +136,5 @@ object ApproxProfiler {
          |FROM $table""".stripMargin
     }
     selects.mkString("\nUNION ALL\n") + "\nORDER BY column_name"
-  }
-
-  /** The single fused aggregate frame (pre-collect) — exposed so the
-    * plan spec can assert the one-scan, no-Expand, no-value-shuffle
-    * shape directly. */
-  def aggregateFrame(spark: SparkSession, dir: String, table: String,
-                     rsd: Double = 0.02): DataFrame = {
-    val v = graft.core.Tables.view(spark, dir, table)
-    val sel = spark.table(v).schema.fields.zipWithIndex.map { case (f, i) =>
-      s"CAST(approx_count_distinct(`${f.name}`, $rsd) AS BIGINT) AS v_$i"
-    }
-    spark.sql(s"SELECT COUNT(*) AS record_ct, ${sel.mkString(", ")} FROM $v")
   }
 }

@@ -7,18 +7,26 @@ import org.apache.spark.sql.types.{StructField, StructType, StringType}
 
 import graft.oracle.{Dialect, DuckDialect, SparkDialect}
 
-/** Single-pass-per-class table profiler.
+/** Single-pass-per-class table profiler, and the one kernel that turns
+  * a metric entry list into Spark jobs ([[measure]]; the exact profile
+  * here, [[SampledProfiler]] and [[ApproxProfiler]] all run through it).
   *
   * The reference profiles one column per query — an N-column table is
   * scanned N+ times (reference: testgen/commands/run_profiling.py:179-184).
   * Here the full metric set of ALL columns is computed in three bounded
-  * jobs per table, each shaped for Spark's execution model:
+  * jobs per relation, each shaped for Spark's execution model:
   *
   *  1. **Scalar job** — every non-distinct aggregate (counts, sums, votes,
-  *     min/max/avg/stddev, regex classifiers) for every column fused into
-  *     ONE aggregate over ONE scan. No DISTINCT ⇒ no Expand ⇒ the plan
-  *     stays a two-phase partial HashAggregate inside whole-stage codegen,
-  *     and the shuffle carries a single partial-state row per partition.
+  *     min/max/avg/stddev, regex classifiers) for every column, with no
+  *     DISTINCT ⇒ no Expand ⇒ the plan stays a two-phase partial
+  *     HashAggregate inside whole-stage codegen, and the shuffle carries a
+  *     single partial-state row per partition. The columns are CHUNKED
+  *     into bounded groups of expressions ([[ChunkExprs]]), each chunk its
+  *     own concurrent job: codegen/JIT compile time grows superlinearly
+  *     with the generated class size (a fused 160-expression aggregate
+  *     costs ~9s to compile vs <1s to execute at sf0.1), while parquet's
+  *     columnar layout means the chunks read DISJOINT column subsets —
+  *     total I/O stays one full scan regardless of chunk count.
   *  2. **Distinct job** — every COUNT(DISTINCT expr) re-expressed as an
   *     unpivot (`stack`) to (metric_id, value) rows followed by two
   *     group-bys: (id, value) — map-side combine collapses duplicates
@@ -30,15 +38,14 @@ import graft.oracle.{Dialect, DuckDialect, SparkDialect}
   *     columns only (ObjectHashAggregate; kept out of job 1 so job 1 stays
   *     codegen).
   *
-  * The three results are metadata-sized (one row or one row per metric);
-  * they are collected and assembled into the final per-column rows on the
-  * driver — no joins, no unions of wide aggregate plans. Results are
-  * memoized per (session, dir, table): profiling feeds many downstream
-  * queries (inference, hygiene, generation, scoring) which share one pass,
+  * An entry list with no distinct or percentile entries (the sketch
+  * profile) is therefore one scalar statement. The results are
+  * metadata-sized (one row or one row per metric); they are collected
+  * and assembled into the final per-column rows on the driver — no
+  * joins, no unions of wide aggregate plans. Results are memoized per
+  * (session, dir, table): profiling feeds many downstream queries
+  * (inference, hygiene, generation, scoring) which share one pass,
   * mirroring the reference's profile_results app-DB table.
-  *
-  * At very large row counts the reference samples (>100k rows by default);
-  * `profile` takes an optional sample fraction for that path.
   */
 object Profiler {
 
@@ -81,7 +88,7 @@ object Profiler {
   /** Packs per-column expression lists, in order and never splitting a
     * column, into chunks of at most [[ChunkExprs]] expressions (a column
     * with more than that gets a chunk of its own). */
-  private[profiling] def chunked(perCol: Seq[Seq[String]]): Seq[Seq[String]] = {
+  private def chunked(perCol: Seq[Seq[String]]): Seq[Seq[String]] = {
     val out = Seq.newBuilder[Seq[String]]
     var cur = Seq.empty[String]
     perCol.filter(_.nonEmpty).foreach { sel =>
@@ -99,51 +106,51 @@ object Profiler {
     * to the sketch profiler — note the narrower per-column schema
     * documented on [[ApproxProfiler.profile]]. */
   def profile(spark: SparkSession, dir: String, table: String,
-              sampleFraction: Option[Double] = None,
               mode: String = "exact"): DataFrame =
     if (mode == "approx")
       ApproxProfiler.profile(spark, dir, table)
-    else spark.table(graft.core.Materialize.view(
-      spark, "profile", (dir, table, sampleFraction))(
-      compute(spark, dir, table, sampleFraction)))
+    else spark.table(graft.core.Materialize.view(spark, "profile", (dir, table))(
+      compute(spark, dir, table)))
 
-  private def compute(spark: SparkSession, dir: String, table: String,
-                      sampleFraction: Option[Double]): DataFrame = {
-    val d: Dialect = SparkDialect
-    val view = sampleFraction.fold(graft.core.Tables.view(spark, dir, table)) { f =>
-      graft.core.Materialize.view(spark, "profile_sample", (dir, table, f))(
-        graft.core.Tables.load(spark, dir, table).sample(withReplacement = false, f, seed = 64L))
+  private def compute(spark: SparkSession, dir: String, table: String): DataFrame = {
+    val view = graft.core.Tables.view(spark, dir, table)
+    val fields = spark.table(view).schema.fields.toSeq
+    val perCol: Seq[(Int, Seq[MetricEntry])] = fields.zipWithIndex.map { case (f, i) =>
+      i -> ProfileMetrics.entries(f.name, i + 1, f.dataType)
     }
-    val df = spark.table(view)
+    val vals = measure(spark, view, perCol)
+    val schema = StructType(
+      StructField("column_name", StringType) +:
+        perCol.head._2.map(e => StructField(e.name, ProfileMetrics.sparkType(e.tpe))))
+    val rows = fields.zipWithIndex.sortBy(_._1.name).map { case (f, i) =>
+      Row.fromSeq(f.name +: perCol(i)._2.map(e => vals((i, e.name))))
+    }
+    spark.createDataFrame(rows.asJava, schema)
+  }
 
-    val perCol: Seq[(StructField, Int, Seq[MetricEntry])] =
-      df.schema.fields.toSeq.zipWithIndex.map { case (f, i) =>
-        (f, i, ProfileMetrics.entries(f.name, i + 1, f.dataType))
-      }
-
+  /** Runs every (column index, entries) of `perCol` over the relation
+    * `rel` as the three jobs above, concurrently, and returns each
+    * entry's value by (column index, entry name): a [[ConstM]]'s value,
+    * null for an entry that does not apply, 0 for a distinct count with
+    * no non-null value. */
+  private[profiling] def measure(spark: SparkSession, rel: String,
+                                 perCol: Seq[(Int, Seq[MetricEntry])]): Map[(Int, String), Any] = {
+    val d: Dialect = SparkDialect
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     // Bounded leaf-action pool (graft.core.Pools): the all-tables cascade
     // would otherwise fan out ~40 concurrent jobs and thrash the scheduler.
     implicit val ec: scala.concurrent.ExecutionContext = graft.core.Pools.actions
 
-    // Job 1: all scalar aggregates — no distinct, so the plan is a
-    // two-phase partial aggregate with map-side combine. The columns are
-    // CHUNKED into bounded groups of expressions, each chunk its own
-    // concurrent job: codegen/JIT compile time grows superlinearly with
-    // the generated class size (a fused 160-expression aggregate costs
-    // ~9s to compile vs <1s to execute at sf0.1), while parquet's
-    // columnar layout means the chunks read DISJOINT column subsets —
-    // total I/O stays one-full-scan regardless of chunk count, so this
-    // holds at 100 TB where scan bytes, not plan compiles, dominate.
-    val scalarChunks: Seq[Seq[String]] = chunked(perCol.map { case (_, i, es) =>
+    // Job 1: scalar chunks.
+    val scalarChunks: Seq[Seq[String]] = chunked(perCol.map { case (i, es) =>
       es.collect { case s: ScalarM if s.applies => s }
         .map(e => s"${e.expr(d)} AS v_${i}_${e.name}")
     })
     val scalarFut: Future[Map[String, Any]] = Future.sequence(
       scalarChunks.map { sel =>
         Future {
-          val row = spark.sql(s"SELECT ${sel.mkString(",\n  ")} FROM $view").collect()(0)
+          val row = spark.sql(s"SELECT ${sel.mkString(",\n  ")} FROM $rel").collect()(0)
           row.schema.fieldNames.zipWithIndex
             .map { case (n, j) => n -> row.get(j) }.toMap
         }
@@ -151,7 +158,7 @@ object Profiler {
 
     // Job 2: distinct counts via unpivot + two-phase group-by.
     val dspecs: Seq[(Int, DistinctM)] = for {
-      (_, i, es) <- perCol
+      (i, es) <- perCol
       e <- es.collect { case x: DistinctM if x.applies => x }
     } yield (i, e)
     val kidOf: Map[(Int, String), Int] =
@@ -178,7 +185,7 @@ object Profiler {
           s"""SELECT kid, COUNT(*) AS ct FROM (
              |  SELECT kid, sv, nv, iv FROM (
              |    SELECT stack(${stackArgs.length}, ${stackArgs.mkString(",\n      ")})
-             |           AS (kid, sv, nv, iv) FROM $view
+             |           AS (kid, sv, nv, iv) FROM $rel
              |  ) WHERE sv IS NOT NULL OR nv IS NOT NULL OR iv IS NOT NULL
              |  GROUP BY kid, sv, nv, iv
              |) GROUP BY kid""".stripMargin
@@ -188,7 +195,7 @@ object Profiler {
 
     // Job 3: exact percentiles per numeric column (one array call each).
     val pctCols: Seq[(Int, Seq[PctM])] = perCol.collect {
-      case (_, i, es) if es.exists { case p: PctM => p.applies; case _ => false } =>
+      case (i, es) if es.exists { case p: PctM => p.applies; case _ => false } =>
         i -> es.collect { case p: PctM if p.applies => p }
     }
     val pctFut: Future[Map[(Int, String), Any]] =
@@ -199,7 +206,7 @@ object Profiler {
           val input = ps.head.input(d)
           s"transform(percentile($input, array($qs)), x -> CAST(ROUND(x, 4) AS DOUBLE)) AS p_$i"
         }
-        val row = spark.sql(s"SELECT ${sel.mkString(", ")} FROM $view").collect()(0)
+        val row = spark.sql(s"SELECT ${sel.mkString(", ")} FROM $rel").collect()(0)
         pctCols.flatMap { case (i, ps) =>
           val arr = row.getAs[scala.collection.Seq[Any]](s"p_$i")
           ps.zipWithIndex.map { case (p, j) =>
@@ -208,30 +215,19 @@ object Profiler {
         }.toMap
       }
 
-    // The three jobs (scalar chunks, distinct, percentiles) run
-    // concurrently — independent actions over the same scan.
     val scalarVals = Await.result(scalarFut, Duration.Inf)
     val dmap = Await.result(dmapFut, Duration.Inf)
     val pctVals = Await.result(pctFut, Duration.Inf)
-
-    // Assembly: metadata-sized, driver-side.
-    val entriesRef = perCol.head._3
-    val schema = StructType(
-      StructField("column_name", StringType) +:
-        entriesRef.map(e => StructField(e.name, ProfileMetrics.sparkType(e.tpe))))
-    val rows = perCol.sortBy(_._1.name).map { case (f, i, es) =>
-      val vals: Seq[Any] = es.map {
-        case c: ConstM => c.value
-        case s: ScalarM =>
-          if (!s.applies) null
-          else scalarVals(s"v_${i}_${s.name}")
-        case dm: DistinctM =>
-          if (!dm.applies) null else dmap.getOrElse(kidOf((i, dm.name)), 0L)
-        case p: PctM =>
-          if (!p.applies) null else pctVals.getOrElse((i, p.name), null)
+    perCol.flatMap { case (i, es) =>
+      es.map { e =>
+        (i, e.name) -> (e match {
+          case c: ConstM => c.value
+          case x if !x.applies => null
+          case s: ScalarM => scalarVals(s"v_${i}_${s.name}")
+          case dm: DistinctM => dmap.getOrElse(kidOf((i, dm.name)), 0L)
+          case p: PctM => pctVals.getOrElse((i, p.name), null)
+        })
       }
-      Row.fromSeq(f.name +: vals)
-    }
-    spark.createDataFrame(rows.asJava, schema)
+    }.toMap
   }
 }

@@ -1,7 +1,7 @@
 package graft.profiling
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.{StructField, StructType}
 
 import graft.oracle.{Dialect, DuckDialect, SparkDialect}
 
@@ -29,15 +29,9 @@ import graft.oracle.{Dialect, DuckDialect, SparkDialect}
   * template are multiplied by sample_ratio (distinct counts deliberately
   * not rescaled — "already representative in a random sample").
   *
-  * Scale: the Spark path mirrors Profiler's job discipline over the
-  * sampled scan — scalar aggregates CHUNKED into bounded codegen'd
-  * groups (disjoint column subsets, one-full-scan total I/O), and all
-  * distinct counts routed through ONE stack-unpivot group-by job (never
-  * an inline COUNT(DISTINCT), which would plan a multi-distinct Expand
-  * per chunk). The results assemble into one wide local row, unpivoted
-  * to per-column rows. The sample itself is never materialized: at
-  * 100 TB a 30% sample is still tens of TB, so the Bernoulli filter
-  * stays fused into every job's scan.
+  * Scale: the sample is landed once and profiled by [[Profiler.measure]],
+  * the exact profile's job kernel; its results assemble into one wide
+  * local row, unpivoted to per-column rows by the rescale SQL.
   */
 object SampledProfiler {
 
@@ -75,7 +69,7 @@ object SampledProfiler {
     "min_value", "max_value", "avg_value", "min_text", "max_text")
 
   private def metricsOf(schema: StructType) =
-    schema.fields.zipWithIndex.map { case (f, i) =>
+    schema.fields.toSeq.zipWithIndex.map { case (f, i) =>
       (f, i, ProfileMetrics.entries(f.name, i + 1, f.dataType)
         .filter(e => rescaledMetrics(e.name) || keptMetrics(e.name)))
     }
@@ -83,7 +77,7 @@ object SampledProfiler {
   /** Per-column output select items over a relation whose columns are the
     * aggregated measures aliased c<i>_<name>; `ratioExpr` multiplies the
     * rescaled metrics. */
-  private def branch(f: org.apache.spark.sql.types.StructField, i: Int,
+  private def branch(f: StructField, i: Int,
                      ms: Seq[MetricEntry], ratioExpr: String,
                      from: String, rendered: String => String): String = {
     val items = ms.map { e =>
@@ -170,7 +164,6 @@ object SampledProfiler {
     }
 
   private def compute(spark: SparkSession, dir: String): DataFrame = {
-    val d: Dialect = SparkDialect
     val schema = graft.core.Tables.load(spark, dir, "lineitem").schema
     // sampling params computed driver-side (reference: profiling_query.py:22-53)
     val n = rowCount(spark, dir)
@@ -179,103 +172,22 @@ object SampledProfiler {
     // into the same double expressions, so estimates hash-match exactly
     val ratioExpr = s"(CAST($n AS DOUBLE) / $sampleCount)"
     val cols = metricsOf(schema)
-    // The sample is MATERIALIZED ONCE per entry (localCheckpoint), then
-    // every downstream job reads the checkpointed partitions: the
-    // k scalar chunks + the distinct-unpivot job previously re-derived
-    // the Bernoulli draw with a full lineitem scan EACH. With j jobs the
-    // trade is (j × full-scan) vs (1 full-scan + sample-write +
-    // j × sample-scan); at a 30% sample and 3+ jobs the materialized
-    // form wins on a cluster too — the real-cluster equivalent is
-    // persisting the sample to storage before the profiling fan-out.
-    // Over it, the same job split as Profiler.compute: scalar aggregates
-    // chunked into bounded codegen'd groups, and ALL distinct counts
-    // routed through ONE stack-unpivot group-by job — never an inline
-    // COUNT(DISTINCT) per chunk, which would plan a multi-distinct
-    // Expand over the sampled scan per chunk.
-    val sampled = sampledView(spark, dir)
-
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: scala.concurrent.ExecutionContext = graft.core.Pools.actions
-
-    // Job 1: scalar chunks — no DISTINCT, so each chunk stays a two-phase
-    // partial HashAggregate inside whole-stage codegen. Chunk size bounds
-    // the generated class (compile time grows superlinearly with it);
-    // parquet's columnar layout means chunks read disjoint column subsets.
-    val perColScalar: Seq[Seq[String]] = cols.map { case (_, i, ms) =>
-      ms.collect { case e: ScalarM if e.applies =>
-        s"${e.expr(d)} AS c${i}_${e.name}"
-      }
-    }
-    val chunks: Seq[Seq[String]] = Profiler.chunked(perColScalar)
-    val scalarFut: Future[Map[String, Any]] = Future.sequence(
-      chunks.map { sel =>
-        Future {
-          val row = spark.sql(
-            s"""SELECT ${sel.mkString(",\n  ")}
-               |  FROM $sampled""".stripMargin).collect()(0)
-          row.schema.fieldNames.zipWithIndex
-            .map { case (nm, j) => nm -> row.get(j) }.toMap
-        }
-      }).map(_.foldLeft(Map.empty[String, Any])(_ ++ _))
-
-    // Job 2: every COUNT(DISTINCT) as one unpivot + two-phase group-by —
-    // map-side combine collapses duplicates before the exchange, the plan
-    // that survives 100 TB (Profiler job 2 is the template).
-    val dspecs: Seq[(Int, DistinctM)] = cols.flatMap { case (_, i, ms) =>
-      ms.collect { case e: DistinctM if e.applies => (i, e) }
-    }
-    val kidOf: Map[(Int, String), Int] =
-      dspecs.zipWithIndex.map { case ((i, e), kid) => (i, e.name) -> kid }.toMap
-    val dmapFut: Future[Map[Int, Long]] =
-      if (dspecs.isEmpty) Future.successful(Map.empty)
-      else Future {
-        val nullS = "CAST(NULL AS STRING)"
-        val nullN = "CAST(NULL AS DOUBLE)"
-        val nullI = "CAST(NULL AS BIGINT)"
-        val stackArgs = dspecs.zipWithIndex.map { case ((_, e), kid) =>
-          val inner = e.inner(d)
-          e.cls match {
-            case "S" => s"$kid, $inner, $nullN, $nullI"
-            case "T" => s"$kid, CAST($inner AS STRING), $nullN, $nullI"
-            case "D" => s"$kid, $nullS, " +
-              s"CAST(UNIX_MICROS(CAST($inner AS TIMESTAMP)) AS DOUBLE), $nullI"
-            case "I" => s"$kid, $nullS, $nullN, CAST($inner AS BIGINT)"
-            case _   => s"$kid, $nullS, CAST($inner AS DOUBLE), $nullI"
-          }
-        }
-        spark.sql(
-          s"""SELECT kid, COUNT(*) AS ct FROM (
-             |  SELECT kid, sv, nv, iv FROM (
-             |    SELECT stack(${stackArgs.length}, ${stackArgs.mkString(",\n      ")})
-             |           AS (kid, sv, nv, iv) FROM $sampled
-             |  ) WHERE sv IS NOT NULL OR nv IS NOT NULL OR iv IS NOT NULL
-             |  GROUP BY kid, sv, nv, iv
-             |) GROUP BY kid""".stripMargin).collect()
-          .map(r => r.getInt(0) -> r.getLong(1)).toMap
-      }
-
-    val scalarVals = Await.result(scalarFut, Duration.Inf)
-    val dmap = Await.result(dmapFut, Duration.Inf)
+    // The sample is MATERIALIZED ONCE (localCheckpoint) and every
+    // profiling job reads the checkpointed partitions instead of
+    // re-deriving the Bernoulli draw with a full lineitem scan each. With
+    // j jobs the trade is (j × full-scan) vs (1 full-scan + sample-write +
+    // j × sample-scan); at a 30% sample and 3+ jobs the materialized form
+    // wins on a cluster too — the real-cluster equivalent is persisting
+    // the sample to storage before the profiling fan-out.
+    val vals = Profiler.measure(spark, sampledView(spark, dir),
+      cols.map { case (_, i, ms) => i -> ms })
 
     // Reassemble into the single wide 1-row local relation the unpivot
     // branches read for free (driver-side, metadata-sized).
     val aggSchema = StructType(cols.flatMap { case (_, i, ms) =>
-      ms.map(e => org.apache.spark.sql.types.StructField(
-        s"c${i}_${e.name}", ProfileMetrics.sparkType(e.tpe)))
+      ms.map(e => StructField(s"c${i}_${e.name}", ProfileMetrics.sparkType(e.tpe)))
     })
-    val aggVals: Seq[Any] = cols.flatMap { case (_, i, ms) =>
-      ms.map {
-        case c: ConstM => c.value
-        case s: ScalarM =>
-          if (!s.applies) null else scalarVals(s"c${i}_${s.name}")
-        case dm: DistinctM =>
-          if (!dm.applies) null else dmap.getOrElse(kidOf((i, dm.name)), 0L)
-        case p: PctM =>
-          null // percentile metrics are not in the sampled profile's set
-      }
-    }
-    val aggRow = org.apache.spark.sql.Row.fromSeq(aggVals)
+    val aggRow = Row.fromSeq(cols.flatMap { case (_, i, ms) => ms.map(e => vals((i, e.name))) })
     graft.core.Materialize.sql(spark,
       spark.createDataFrame(java.util.Arrays.asList(aggRow), aggSchema)) { case Seq(agg) =>
       val selects = cols.map { case (f, i, ms) =>

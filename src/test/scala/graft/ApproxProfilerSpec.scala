@@ -89,8 +89,10 @@ class ApproxProfilerSpec extends SparkSpec {
   }
 
   test("the sketch profile is one scan with no Expand and no value shuffle") {
-    val p = ApproxProfiler.aggregateFrame(spark, sfDir, "lineitem")
-      .queryExecution.executedPlan.toString
+    val sqls = ProfileJobs.withColdDir(spark, sfDir)(dir =>
+      ProfileJobs.statements(spark)(ApproxProfiler.profile(spark, dir, "lineitem")))
+    assert(sqls.length == 1, s"expected 1 statement, got:\n${sqls.map(_._1).mkString("\n---\n")}")
+    val p = sqls.head._2
     assert(!p.contains("Expand"), "multi-distinct Expand crept in")
     val scans = "FileScan parquet".r.findAllIn(p).length
     assert(scans == 1, s"expected 1 scan, got $scans")

@@ -44,4 +44,16 @@ class MaterializeSpec extends SparkSpec {
     assert(spark.table(b).count() === 7)
     assert(runs === Map("a" -> 1, "b" -> 1))
   }
+
+  test("no lock outlives its landing") {
+    val names = (1 to 5).map { k =>
+      Materialize.view(spark, "mat_spec_locks", k, Materialize.Checkpoint)(
+        spark.range(0, k).toDF("id"))
+    }
+    // a second call finds the view and takes no lock either
+    assert(Materialize.view(spark, "mat_spec_locks", 3)(spark.range(0).toDF("id")) === names(2))
+    assert(names.forall(n => !Materialize.lockHeld(n)),
+      s"locks left behind: ${names.filter(Materialize.lockHeld)}")
+    assert(names.map(n => spark.table(n).count()) === (1L to 5L))
+  }
 }
